@@ -6,16 +6,20 @@ Every table is a pure function of ``(seed, sizes)``.  Transaction times
 fall inside the fact query's date-dimension range (2015-01-01 ..
 2024-12-31); a transaction outside it would inner-join to nothing, and a
 zone whose fact comes out empty makes the catalog stage fail, so
-:func:`write_raw_zone` refuses to return one.
+:func:`write_raw_zone` checks the written zone with the oracle's fact
+query and refuses one whose fact is empty.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+
+from perfbench import oracle
 
 NULL = r"\N"
 DAY0 = np.datetime64("2015-01-01")
@@ -110,20 +114,6 @@ def write_csv(df: pd.DataFrame, path: str) -> int:
     return os.path.getsize(path)
 
 
-def expected_fact_groups(zone: dict[str, pd.DataFrame]) -> int:
-    """Fact rows the flagship query will produce: distinct (day, customer,
-    account) over transactions that join an account, a payment type and
-    an account type, dated inside the date dim."""
-    t = zone["payment_transaction"]
-    acc = zone["account"].set_index("acc_id")
-    joined = t[t.acc_id.isin(acc.index)
-               & t.payment_code.isin(PAYMENT_TYPES.type_code)]
-    joined = joined[acc.loc[joined.acc_id, "acc_type"].isin(ACCOUNT_TYPES.type_id).to_numpy()]
-    day = joined.transaction_time.str.slice(0, 10)
-    in_range = (day >= "2015-01-01") & (day <= "2024-12-31")
-    return int(joined.assign(day=day)[in_range].drop_duplicates(["day", "acc_id"]).shape[0])
-
-
 def raw_zone(seed: int, sizes: Sizes) -> dict[str, pd.DataFrame]:
     rng = np.random.default_rng(seed)
     return {
@@ -137,14 +127,15 @@ def raw_zone(seed: int, sizes: Sizes) -> dict[str, pd.DataFrame]:
 
 def write_raw_zone(raw_dir: str, seed: int, sizes: Sizes) -> dict:
     """Write the five raw-zone CSVs; returns ``{"bytes", "fact_rows",
-    "transactions"}``.  Raises when the fact would be empty."""
-    zone = raw_zone(seed, sizes)
-    fact_rows = expected_fact_groups(zone)
-    if fact_rows == 0:
-        raise ValueError("generated raw zone joins to an empty fact; refusing to write it")
+    "transactions"}``.  When the fact would be empty, removes what it
+    wrote and raises."""
     os.makedirs(raw_dir, exist_ok=True)
     total = sum(write_csv(df, os.path.join(raw_dir, f"{name}.csv"))
-                for name, df in zone.items())
+                for name, df in raw_zone(seed, sizes).items())
+    fact_rows = oracle.fact_rows(raw_dir)
+    if fact_rows == 0:
+        shutil.rmtree(raw_dir)
+        raise ValueError("generated raw zone joins to an empty fact; refusing to use it")
     return {"bytes": total, "fact_rows": fact_rows, "transactions": sizes.transactions}
 
 

@@ -91,6 +91,7 @@ def per_layer(tracer, ops: list[dict], log_dir: str, extra: dict, names):
     metrics["pipeline.retries"] = float(extra["retries"])
     metrics.update(extra["jvm"])
     metrics["host.probe_s"] = extra["host.probe_s"]
+    metrics["peak_rss_mb"] = extra["peak_rss_mb"]
     untraced = [r["wall_s"] for r in ops if not r["traced"] and "error" not in r]
     traced_walls = [r["wall_s"] for r in traced]
     if traced_walls and untraced:

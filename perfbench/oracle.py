@@ -27,19 +27,19 @@ def _parquet(path: str, hive: bool = False) -> str:
     return f"read_parquet('{path}/**/*.parquet', hive_partitioning = {str(hive).lower()})"
 
 
-def _close(a: float, b: float, rows: int) -> bool:
-    """Sums of 2-decimal rounded values: one cent of slack per summed
-    row covers rounding ties that land differently in another
-    summation order."""
-    return abs(a - b) <= 0.01 * max(rows, 1) + 1e-9 * abs(b)
+def _close(a: float, b: float) -> bool:
+    """Two 2-decimal rounded aggregates of the same rows: summed in
+    another order, a half-cent tie can round the other way."""
+    return abs(a - b) <= 0.011 + 1e-12 * abs(b)
 
 
 # -- nightly_etl -----------------------------------------------------------
 
-def fact_expectation(raw: str) -> dict[int, tuple[int, float]]:
-    """Per fact year: (rows, sum of rounded account daily spending),
-    from the raw CSVs with the flagship query's joins and grain."""
-    q = f"""
+def _fact_groups(raw: str) -> str:
+    """The fact's grain from the raw CSVs, with the flagship query's
+    joins and date range: one row per (day, customer, account) with its
+    transaction count and rounded spending."""
+    return f"""
     WITH t AS (
         SELECT CAST(CAST(t.transaction_time AS TIMESTAMP) AS DATE) AS d,
                a.cust_id, t.acc_id, CAST(t.amount AS DOUBLE) AS amount
@@ -47,27 +47,38 @@ def fact_expectation(raw: str) -> dict[int, tuple[int, float]]:
         JOIN {_csv(raw + '/account.csv')} a ON t.acc_id = a.acc_id
         JOIN {_csv(raw + '/payment_type.csv')} p ON t.payment_code = p.type_code
         JOIN {_csv(raw + '/account_type.csv')} y ON a.acc_type = y.type_id
-    ), g AS (
-        SELECT d, cust_id, acc_id, ROUND(SUM(amount), 2) AS s FROM t
-        WHERE d BETWEEN DATE '2015-01-01' AND DATE '2024-12-31'
-        GROUP BY d, cust_id, acc_id
     )
-    SELECT year(d), COUNT(*), SUM(s) FROM g GROUP BY 1"""
-    with _con() as con:
-        return {int(y): (int(n), float(s)) for y, n, s in con.execute(q).fetchall()}
+    SELECT d, cust_id, acc_id, COUNT(*) AS n, ROUND(SUM(amount), 2) AS s FROM t
+    WHERE d BETWEEN DATE '2015-01-01' AND DATE '2024-12-31'
+    GROUP BY d, cust_id, acc_id"""
 
 
-def check_fact(golden: str, expected: dict[int, tuple[int, float]]):
-    q = f"""SELECT p_year, COUNT(*), SUM(account_daily_spending)
-            FROM {_parquet(golden + '/fact_snapshot_daily_transaction', hive=True)}
-            GROUP BY 1"""
+def fact_rows(raw: str) -> int:
+    """Rows the fact snapshot will hold for the raw zone under ``raw``."""
     with _con() as con:
-        got = {int(y): (int(n), float(s)) for y, n, s in con.execute(q).fetchall()}
-    if sorted(got) != sorted(expected):
-        raise CheckFailed(f"fact years {sorted(got)} != expected {sorted(expected)}")
-    for y, (n, s) in expected.items():
-        if got[y][0] != n or not _close(got[y][1], s, n):
-            raise CheckFailed(f"fact year {y}: got {got[y]}, expected {(n, s)}")
+        return con.execute(f"SELECT COUNT(*) FROM ({_fact_groups(raw)})").fetchone()[0]
+
+
+def check_fact(golden: str, raw: str):
+    """Every fact row matches its (day, customer, account) group computed
+    from the raw CSVs: same key set, same transaction count, spending
+    within a cent."""
+    fact = _parquet(golden + "/fact_snapshot_daily_transaction", hive=True)
+    q = f"""
+    WITH e AS ({_fact_groups(raw)}),
+    f AS (SELECT transaction_date AS d, CAST(cust_id AS VARCHAR) AS cust_id,
+                 CAST(acc_id AS VARCHAR) AS acc_id,
+                 account_no_transactions_daily AS n, account_daily_spending AS s
+          FROM {fact})
+    SELECT (SELECT COUNT(*) FROM e), (SELECT COUNT(*) FROM f),
+           COUNT(*) FILTER (WHERE e.d IS NULL OR f.d IS NULL OR e.n <> f.n
+                                  OR abs(e.s - f.s) > 0.011)
+    FROM e FULL JOIN f ON e.d = f.d AND e.cust_id = f.cust_id AND e.acc_id = f.acc_id"""
+    with _con() as con:
+        want, got, bad = con.execute(q).fetchone()
+    if not want or got != want or bad:
+        raise CheckFailed(f"fact: {got} rows, expected {want} (non-zero); "
+                          f"{bad} keys missing, extra or off by more than a cent")
 
 
 # -- daily_refresh -----------------------------------------------------------
@@ -155,7 +166,7 @@ def _norm(v):
 
 def check_report(got: dict[str, list[tuple]], expected: dict[str, list[tuple]]):
     """Same rows per query (order-insensitive), numbers equal within the
-    rounding slack of :func:`_close`."""
+    slack of :func:`_close`."""
     for name, want in expected.items():
         g = sorted(tuple(_norm(v) for v in r) for r in got[name])
         w = sorted(tuple(_norm(v) for v in r) for r in want)
@@ -163,6 +174,6 @@ def check_report(got: dict[str, list[tuple]], expected: dict[str, list[tuple]]):
             raise CheckFailed(f"report {name}: {len(g)} rows, expected {len(w)} (non-empty)")
         for a, b in zip(g, w):
             for x, y in zip(a, b):
-                ok = _close(x, y, 1) if isinstance(y, float) else str(x) == str(y)
+                ok = _close(x, y) if isinstance(y, float) else str(x) == str(y)
                 if not ok:
                     raise CheckFailed(f"report {name}: row {a} != expected {b}")

@@ -1,14 +1,14 @@
 """End-to-end benchmark of the banking engine.
 
-    python3 perfbench/run.py --workload nightly_etl --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload nightly_etl --seed 1 --seconds 6 --trace 0
 
 Run from the repository root.  One driver process starts Spark on
 ``local[<cores>]``, generates the workload's inputs from ``--seed``,
 builds its stored state, warms up, then runs ops back to back (one
 closed-loop client) until the ops have taken ``--seconds`` and at least
-``MIN_OPS`` have run.  Every op's
-outputs are checked outside the timed window; an op that raises, ends
-in a failed pipeline run or fails its check counts as failed.
+``MIN_OPS`` have run.  Every op's outputs are checked outside the timed
+window; an op that raises, ends in a failed pipeline run or fails its
+check counts as failed.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics`` (the end-to-end metrics with ``--trace 0``,
@@ -19,9 +19,11 @@ percentiles, span self times) goes to ``.perfbench/results/``.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -30,13 +32,22 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, ".perfbench")
 
-#: ops still get a little cheaper over a run's first few ops, so a
-#: window's median must not depend on how many ops fit into it: every
-#: window holds at least this many (the traced run one more: untraced,
-#: traced, untraced)
-MIN_OPS = 2
+#: the first ops in a fresh JVM cost up to three warm ones (class
+#: loading, codegen, C2 compilation, Python worker start-up); set-up
+#: runs this many before the window
+WARMUP_OPS = 1
+#: every window holds at least this many ops (the traced run one more:
+#: it alternates untraced and traced ops, starting untraced).  Ops still
+#: get cheaper inside the window as the JIT compiles, so a median over a
+#: count of ops that varies from run to run mixes op positions; with
+#: ``run_seconds`` below this many ops' time, the floor decides and
+#: every run's median is over the same positions
+MIN_OPS = 3
+#: set-up builds the workload's inputs and state this many times and
+#: counts the median build in ``setup_s``
+SETUP_BUILDS = 3
 
-END_TO_END = {"setup_s": "s", "op_p50_s": "s", "items_per_s": "items/s", "peak_rss_mb": "MB"}
+END_TO_END = {"setup_s": "s", "op_p50_s": "s", "items_per_s": "items/s"}
 
 #: per-layer metrics and their units; every traced run reports all of
 #: them (0 where a workload never reaches the layer)
@@ -59,7 +70,7 @@ PER_LAYER = {
     "spark.shuffle_write_bytes": "B", "spark.shuffle_read_bytes": "B",
     "spark.spill_bytes": "B", "spark.input_bytes": "B", "spark.output_bytes": "B",
     "spark.files_written": "count", "spark.driver_gap_s": "s",
-    "jvm.threads": "count", "jvm.heap_retained_mb": "MB",
+    "jvm.threads": "count", "jvm.heap_retained_mb": "MB", "peak_rss_mb": "MB",
     "write_amp": "ratio",
     "trace.op_p50_s": "s", "trace.overhead": "ratio", "trace.top_level_coverage": "ratio",
     "host.probe_s": "s",
@@ -140,22 +151,69 @@ class RssMeter:
         return total / 1024
 
 
+# -- child processes -----------------------------------------------------------------
+
+#: ``prctl`` option that makes orphaned descendants (Spark's Python
+#: worker daemon, once the JVM is gone) reparent to this process
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def become_subreaper():
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def stop_children():
+    """End every process this run started and wait for each: close the
+    py4j gateway, close the JVM's stdin (its cue to exit), then reap all
+    descendants."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        proc = getattr(gateway, "proc", None)
+        try:
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001 — the JVM may be gone already
+            pass
+        if proc is not None and proc.stdin is not None:
+            proc.stdin.close()
+        SparkContext._gateway = SparkContext._jvm = None
+    reap_descendants()
+
+
+def reap_descendants(timeout: float = 60.0):
+    """Wait for every descendant to end and reap it; kill those still
+    alive after ``timeout`` seconds."""
+    deadline = time.monotonic() + timeout
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            pass
+        left = _descendants(os.getpid())
+        if not left:
+            return
+        if time.monotonic() > deadline:
+            for pid in left:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
+
+
 # -- the run -------------------------------------------------------------------------
 
 def start_spark(work: str, trace: bool):
+    """The engine's own session (default JIT, default driver memory) on
+    ``local[<cores>]``, with its scratch directories inside ``work``."""
     from aws_etl_bank_spark.session import get_spark
 
     cores = len(os.sched_getaffinity(0))
-    confs = {"spark.driver.memory": "1g",
-             "spark.local.dir": os.path.join(work, "spark-local"),
+    confs = {"spark.local.dir": os.path.join(work, "spark-local"),
              "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-             # C1 only: under the default tiered JIT a fresh driver spends its
-             # first minutes compiling with C2, and op times keep falling
-             # for as long as a run lasts; C1 reaches steady code within the
-             # warm-up op.  A fixed heap size keeps RSS from tracking heap
-             # growth.
-             "spark.driver.extraJavaOptions":
-                 f"-Dderby.system.home={work} -XX:TieredStopAtLevel=1 -Xms1g"}
+             "spark.driver.extraJavaOptions": f"-Dderby.system.home={work}"}
     if trace:
         log_dir = os.path.join(work, "eventlog")
         os.makedirs(log_dir, exist_ok=True)
@@ -168,18 +226,21 @@ def start_spark(work: str, trace: bool):
 
 
 def host_probe(spark) -> float:
-    """Host speed, not program speed: one timed run of the job of
-    ``bench.calibration_probe`` (md5 -> conv -> hash aggregate on 32
-    partitions) over a quarter of its 32M ids.  The frozen function runs
-    the full job four times, 45 s each under this benchmark's C1-only JVM
-    on a 4-core host, which the traced run's time limit cannot hold."""
+    """Host speed, not program speed: the job of ``bench.calibration_probe``
+    (md5 -> conv -> hash aggregate on 32 partitions) over a quarter of
+    its 32M ids, run three times; the median.  The frozen function runs
+    the full job four times, which a traced run's time limit cannot
+    hold on a slow host."""
     df = (spark.range(0, 8_000_000, 1, 32)
           .selectExpr("id % 9973 AS k",
                       "conv(substring(md5(cast(id AS string)),1,15),16,10) AS h")
           .groupBy("k").agg({"h": "sum"}))
-    t = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t
+    times = []
+    for _ in range(3):
+        t = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        times.append(time.perf_counter() - t)
+    return statistics.median(times)
 
 
 def tail_percentile(samples: list[float]) -> dict | None:
@@ -210,15 +271,22 @@ def _run(args, work: str, workload) -> dict:
     t0 = time.perf_counter()
     spark = start_spark(work, bool(args.trace))
     try:
+        start_s = time.perf_counter() - t0
         tracer = Tracer() if args.trace else NULL_TRACER
-        wl = workload(spark, os.path.join(work, "data"), args.seed)
-        wl.setup()
-        # warm-up: the first op in a fresh JVM costs three to five warm
-        # ones (class loading, codegen, Python worker start-up)
-        wl.op(-1)
-        wl.check(-1)
-        wl.restore(-1)
-        setup_s = time.perf_counter() - t0
+        data = os.path.join(work, "data")
+        builds = []
+        for _ in range(SETUP_BUILDS):
+            shutil.rmtree(data, ignore_errors=True)
+            wl = workload(spark, data, args.seed)
+            t = time.perf_counter()
+            wl.setup()
+            builds.append(time.perf_counter() - t)
+        t = time.perf_counter()
+        for k in range(WARMUP_OPS):
+            wl.op(-1 - k)
+            wl.check(-1 - k)
+            wl.restore(-1 - k)
+        setup_s = start_s + statistics.median(builds) + time.perf_counter() - t
         if args.trace:
             wl.calls = spark.sparkContext.accumulator(0)
         rss = RssMeter(spark.sparkContext._jvm.ProcessHandle.current().pid())
@@ -256,15 +324,16 @@ def _run(args, work: str, workload) -> dict:
                 wl.restore(i)
             except OSError:
                 rec["error"] = rec.get("error") or traceback.format_exc(limit=4)
+            rec["rss_mb"] = rss.peak_mb()
             ops.append(rec)
             i += 1
-        peak_rss = rss.peak_mb()
         wl.tracer = NULL_TRACER
         if args.trace:
             from perfbench.trace import jvm_state
 
             layers = {"jvm": jvm_state(spark), "retries": wl.retries,
-                      "host.probe_s": host_probe(spark)}
+                      "host.probe_s": host_probe(spark),
+                      "peak_rss_mb": ops[MIN_OPS - 1]["rss_mb"]}
     finally:
         spark.stop()
     timed = [r for r in ops if not r["traced"]]
@@ -280,8 +349,11 @@ def _run(args, work: str, workload) -> dict:
             "setup_s": setup_s,
             "op_p50_s": statistics.median(walls),
             "items_per_s": sum(r["items"] for r in good) / sum(r["wall_s"] for r in timed),
-            "peak_rss_mb": peak_rss,
+            # the heap grows with the ops run, so the peak is compared
+            # at an equal op count: after the window's first MIN_OPS ops
+            "peak_rss_mb": ops[MIN_OPS - 1]["rss_mb"],
         },
+        "setup_builds_s": builds,
         "op_samples": len(walls),
         "op_tail": tail_percentile(walls),
     }
@@ -308,7 +380,11 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
     os.makedirs(os.path.join(OUT, "results"), exist_ok=True)
-    result = run(args)
+    become_subreaper()
+    try:
+        result = run(args)
+    finally:
+        stop_children()
     with open(os.path.join(OUT, "results",
                            f"{args.workload}-s{args.seed}-t{args.trace}.json"), "w") as fh:
         json.dump(result, fh, indent=1, default=str)

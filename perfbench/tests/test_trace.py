@@ -166,7 +166,14 @@ def test_generator_is_seeded_and_dated_inside_the_date_dim():
     assert all(a[k].equals(b[k]) for k in a)
     days = a["payment_transaction"].transaction_time.str.slice(0, 10)
     assert days.min() >= "2015-01-01" and days.max() <= "2024-12-31"
-    assert gen.expected_fact_groups(a) > 0
+
+
+def test_generator_writes_a_zone_with_a_non_empty_fact(tmp_path):
+    zone = gen.write_raw_zone(str(tmp_path / "raw"), 5, gen.Sizes(50, 200, 1000))
+    assert zone["fact_rows"] > 0 and zone["transactions"] == 1000
+    assert sorted(os.listdir(tmp_path / "raw")) == sorted(
+        f"{t}.csv" for t in ("customer", "account", "account_type", "payment_type",
+                             "payment_transaction"))
 
 
 def test_generator_refuses_an_empty_fact(tmp_path, monkeypatch):
@@ -181,5 +188,63 @@ def test_generator_refuses_an_empty_fact(tmp_path, monkeypatch):
 
     monkeypatch.setattr(gen, "raw_zone", out_of_range)
     with pytest.raises(ValueError, match="empty fact"):
-        gen.write_raw_zone(str(tmp_path), 1, gen.Sizes(10, 20, 100))
-    assert not os.listdir(tmp_path)
+        gen.write_raw_zone(str(tmp_path / "raw"), 1, gen.Sizes(10, 20, 100))
+    assert not os.path.exists(tmp_path / "raw")
+
+
+def test_fact_check_is_keyed_and_catches_one_dropped_transaction(tmp_path):
+    import duckdb
+
+    from perfbench import oracle
+
+    raw, golden = str(tmp_path / "raw"), str(tmp_path / "golden")
+    gen.write_raw_zone(raw, 2, gen.Sizes(50, 200, 2000))
+    fact = os.path.join(golden, "fact_snapshot_daily_transaction")
+    os.makedirs(golden)
+    duckdb.sql(f"""COPY (SELECT d AS transaction_date, cust_id, acc_id,
+                              n AS account_no_transactions_daily, s AS account_daily_spending,
+                              year(d) AS p_year
+                       FROM ({oracle._fact_groups(raw)}))
+                   TO '{fact}' (FORMAT PARQUET, PARTITION_BY (p_year))""")
+    oracle.check_fact(golden, raw)
+
+    # drop the cheapest transaction of a group that holds several: the
+    # per-year row count does not change and its total moves by little
+    tx = os.path.join(raw, "payment_transaction.csv")
+    rows = duckdb.sql(f"""
+        SELECT trans_id, amount FROM {oracle._csv(tx)}
+        QUALIFY COUNT(*) OVER (PARTITION BY acc_id, transaction_time::DATE) > 1
+        ORDER BY CAST(amount AS DOUBLE) LIMIT 1""").fetchall()
+    assert rows
+    with open(tx) as fh:
+        lines = fh.readlines()
+    drop = f"{rows[0][0]},"
+    kept = [ln for ln in lines if not ln.startswith(drop)]
+    with open(tx, "w") as fh:
+        fh.writelines(kept)
+    with pytest.raises(oracle.CheckFailed, match="1 keys"):
+        oracle.check_fact(golden, raw)
+
+
+def test_reap_descendants_waits_for_orphaned_grandchildren():
+    """A shell that backgrounds two sleeps and exits orphans them, as the
+    JVM's exit orphans Spark's Python worker daemon.  As a subreaper the
+    run adopts them; reaping kills them at the deadline and waits until
+    none is left.  Runs in its own interpreter, so it cannot reap this
+    test process's Spark JVM."""
+    import subprocess
+
+    script = (
+        "import os, subprocess, sys, time\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "from perfbench import run\n"
+        "run.become_subreaper()\n"
+        "subprocess.run(['sh', '-c', 'sleep 30 & sleep 30 & exit 0'], check=True)\n"
+        "before = len(run._descendants(os.getpid()))\n"
+        "t = time.monotonic()\n"
+        "run.reap_descendants(timeout=0.5)\n"
+        "print(before, len(run._descendants(os.getpid())), time.monotonic() - t < 10)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True,
+                         timeout=60, check=True).stdout.split()
+    assert out == ["2", "0", "True"]

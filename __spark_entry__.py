@@ -85,10 +85,9 @@ _PRIORITY = [
 
 
 def _registry():
-    import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401  (populates REGISTRY)
+    from aws_etl_bank_spark.plans.registry import load_registry
 
-    full = reg.REGISTRY
+    full = load_registry()
     # a stale/typo'd slot name would otherwise vanish SILENTLY, shifting
     # every later entry up one slot and costing a round of driver
     # evidence unnoticed — the counterpart of the @q duplicate guard

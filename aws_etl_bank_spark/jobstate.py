@@ -15,6 +15,8 @@ import glob
 import json
 import os
 
+from aws_etl_bank_spark.durable import atomic_write
+
 
 class BookmarkStore:
     def __init__(self, state_path: str):
@@ -42,8 +44,7 @@ class BookmarkStore:
         self._state.update(self._pending)
         self._pending = {}
         os.makedirs(os.path.dirname(self.state_path) or ".", exist_ok=True)
-        with open(self.state_path, "w") as fh:
-            json.dump(self._state, fh, indent=1)
+        atomic_write(self.state_path, json.dumps(self._state, indent=1))
 
     def reset(self, transformation_ctx: str | None = None):
         if transformation_ctx is None:

@@ -837,7 +837,7 @@ def semantic_dedup_pairs(df: DataFrame, vec_col: str = "embedding",
     vectors always land in the same cell (identical similarities, same
     deterministic tie-break), so exact-duplicate recall is 1.0 by
     construction regardless of centroid quality — that is the planted
-    oracle contract (plans/registry_llm.py: dedup_semantic_pairs).
+    oracle contract (plans/registry_llm_corpus.py: dedup_semantic_pairs).
 
     ``assigned`` (r17): a precomputed :func:`assign_cells` result
     (columns id, vec, cell_id) to reuse — for callers that also need

@@ -22,7 +22,7 @@ IDCT of a DC-only block is ``F00/8`` to within 2⁻⁵⁰ relative error, and
 the synthetic fixture (``synthetic_jpeg_payloads``) quantizes DC with
 step 16 so decoded block values land ≥0.5 away from every rounding
 boundary — the decoded image is integer-exact and closed-form in the
-image id (see ``multimodal_decode_jpeg`` in plans/registry_llm.py).
+image id (see ``multimodal_decode_jpeg`` in plans/registry_llm_corpus.py).
 
 Scale shape: decoding is per-image CPU work with no cross-row
 dependency — ``decode_jpeg_features`` runs inside Arrow-batched

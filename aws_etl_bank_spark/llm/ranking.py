@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-#: tokenizer shared with the DuckDB oracle (plans/registry_llm.py):
+#: tokenizer shared with the DuckDB oracle (plans/registry_llm_stream.py):
 #: lowercase, split on non-alphanumeric runs, drop empties
 _TOKEN_SPLIT = "[^a-z0-9]+"
 

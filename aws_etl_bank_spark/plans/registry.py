@@ -16,16 +16,15 @@ go under ``.scratch/`` in the repo.
 
 from __future__ import annotations
 
+import importlib
 import os
 from dataclasses import dataclass
 from typing import Callable
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from aws_etl_bank_spark.session import apply_runtime_confs
-from aws_etl_bank_spark.sources.testdata import load_table
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
@@ -34,8 +33,10 @@ SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.a
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
+    part: str  # defining module; orders the entry (see PARTS)
 
 
+#: filled by @q in import order; read it through load_registry()
 REGISTRY: dict[str, QuerySpec] = {}
 
 
@@ -53,7 +54,7 @@ def q(name: str, oracle: str | None = None):
                 f"duplicate registry entry {name!r}: a second @q would "
                 "silently shadow the first (and its driver evidence); "
                 "pick a new name or delete the old entry explicitly")
-        REGISTRY[name] = QuerySpec(wrapped, oracle)
+        REGISTRY[name] = QuerySpec(wrapped, oracle, fn.__module__)
         return wrapped
 
     return deco
@@ -86,96 +87,28 @@ def _scratch(sf_dir: str, leaf: str) -> str:
     return path
 
 
-def require_part_loading(part_name: str, orchestrator, flag: str,
-                         sanctioned: str =
-                         "aws_etl_bank_spark.plans.registry") -> None:
-    """Shared direct-import tripwire body (ADVICE r15; deduplicated
-    from nine copy-pasted blocks per the r16 review): every registry
-    part/subpart module calls this right after its imports and aborts
-    unless its orchestrator is currently executing its fixed import
-    sequence.  A directly-imported part would otherwise register its
-    entries after the other parts' and silently reorder REGISTRY,
-    which the driver rotation window and the COVERAGE.md ledger index
-    into.  ``sanctioned`` names the import the message should steer
-    the user to — registry_llm parts load via plans.registry_llm, NOT
-    plans.registry (whose load would silently omit every llm entry)."""
-    if not getattr(orchestrator, flag, False):
-        raise ImportError(
-            f"{part_name} must not be imported directly: its entries "
-            f"would register out of order; import {sanctioned} instead")
-
-
-def check_parts_registered(module_names: list[str], registry_id: int,
-                           sanctioned: str =
-                           "aws_etl_bank_spark.plans.registry") -> None:
-    """Post-import completeness check (r16 review finding 1): a part
-    import that was aborted mid-execution (tripwire, syntax error,
-    import-probe `except ImportError: pass`) leaves a PARTIAL module
-    in sys.modules; an orchestrator that then finishes would be cached
-    complete-but-truncated — later imports would silently get a
-    REGISTRY missing that part's entries.  Every part stamps
-    ``_REGISTERED_INTO = id(REGISTRY)`` as its LAST statement; a
-    missing or stale stamp (a part cached from a previous failed
-    attempt registered into a dead dict) fails the orchestrator load
-    itself, so the truncated state can never be cached."""
-    import sys as _sys
-
-    for name in module_names:
-        mod = _sys.modules.get(name)
-        if mod is None or getattr(mod, "_REGISTERED_INTO", None) != registry_id:
-            raise ImportError(
-                f"{name} did not finish registering into this REGISTRY "
-                "(partial import or stale residue from a failed "
-                "direct-import attempt); restart the process and import "
-                f"{sanctioned} first")
-
-
-def reject_partial_parts(module_names: list[str],
-                         sanctioned: str =
-                         "aws_etl_bank_spark.plans.registry") -> None:
-    """Pre-import guard (r16 review finding 2): if a part module is
-    ALREADY mid-execution when the orchestrator starts, the user
-    imported that part directly and the orchestrator's own import of a
-    sibling part would die on a confusing partially-initialized-module
-    error (the sibling's cross-part import of names the partial module
-    has not defined yet).  Detect the state up front and raise the
-    intended diagnostic instead."""
-    import sys as _sys
-
-    for name in module_names:
-        mod = _sys.modules.get(name)
-        if mod is not None and getattr(mod, "_REGISTERED_INTO", None) is None:
-            raise ImportError(
-                f"{name} is mid-import: part modules must not be "
-                f"imported directly; import {sanctioned} instead")
-
-
-# Entry definitions live in four part modules (pure mechanical split,
-# r15, VERDICT r14 task 8) imported here IN ORIGINAL LINE ORDER so
-# REGISTRY's insertion order — which the driver rotation window and
-# the COVERAGE.md ledger reference — is identical to the single-file
-# layout.  The @q duplicate guard makes any accidental double
-# registration loud.
-#
-# _LOADING_PARTS is the direct-import tripwire (ADVICE r15): each part
-# module calls require_part_loading() and aborts unless this flag is
-# True, which it only is while the imports below are executing.  The
-# reject_partial_parts / check_parts_registered pair (r16 review)
-# makes the failure mode loud and uncacheable in BOTH directions: a
-# part already mid-import fails fast with the intended message, and a
-# part that aborted mid-execution fails the orchestrator load itself
-# instead of leaving a truncated REGISTRY cached in sys.modules.
-_PART_MODULES = [
+#: The registry part modules in REGISTRY order.  ``load_registry``
+#: sorts entries by their part's position here, then by definition
+#: order within the part, so the order the driver rotation window and
+#: the COVERAGE.md ledger index into does not depend on which module
+#: was imported first.
+PARTS = (
     "aws_etl_bank_spark.plans.registry_core",
     "aws_etl_bank_spark.plans.registry_sources_sketches",
-    "aws_etl_bank_spark.plans.registry_analytics",
+    "aws_etl_bank_spark.plans.registry_analytics_core",
+    "aws_etl_bank_spark.plans.registry_analytics_ext",
     "aws_etl_bank_spark.plans.registry_dialect",
-]
-reject_partial_parts(_PART_MODULES)
-_LOADING_PARTS = True
-from aws_etl_bank_spark.plans import registry_core  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_sources_sketches  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_analytics  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_dialect  # noqa: E402,F401
-_LOADING_PARTS = False
-check_parts_registered(_PART_MODULES, id(REGISTRY))
+    "aws_etl_bank_spark.plans.registry_llm_corpus",
+    "aws_etl_bank_spark.plans.registry_llm_stream",
+    "aws_etl_bank_spark.plans.registry_llm_scale",
+)
+
+
+def load_registry() -> dict[str, QuerySpec]:
+    """Import every part in ``PARTS`` and return all entries in
+    ``PARTS`` order (a stable sort, so definition order holds within a
+    part)."""
+    for part in PARTS:
+        importlib.import_module(part)
+    rank = {part: i for i, part in enumerate(PARTS)}
+    return dict(sorted(REGISTRY.items(), key=lambda kv: rank[kv[1].part]))

@@ -2,10 +2,9 @@
 quality, sampling, scale patterns (formerly registry_analytics.py
 lines 39-2017).  Pure mechanical move (VERDICT r15 task 7, same
 contract as the r15 registry.py split and the r16 registry_llm
-split): entry source, ``@q`` names, oracles, and REGISTRY insertion
-order are byte-identical to the pre-split layout —
-``plans/registry_analytics.py`` imports the two subparts in the
-original line order.
+split): entry source, ``@q`` names and oracles are byte-identical to
+the pre-split layout.  REGISTRY order comes from ``registry.PARTS``
+(see ``registry.load_registry``).
 """
 
 from __future__ import annotations
@@ -19,14 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    REGISTRY, SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_analytics as _an_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _an_mod, "_LOADING_SUBPARTS")
 
 @q("ts_ohlc_bucket", """
 WITH r AS (
@@ -466,7 +459,7 @@ def stream_heavy_hitters(spark, sf_dir):
     import time as _time
 
     from aws_etl_bank_spark.functions.scale import heavy_hitters_topk
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming import for_each_batch
 
@@ -1118,7 +1111,7 @@ def stream_batch_unified(spark, sf_dir):
     crosses the driver)."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming import for_each_batch
 
@@ -1367,7 +1360,7 @@ def stream_ohlc_incremental(spark, sf_dir):
 
     import pyspark.sql.types as T
 
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming import for_each_batch
 
@@ -2006,6 +1999,3 @@ def maintenance_compact_small_files(spark, sf_dir):
     out_path = _scratch(sf_dir, "supplier_compacted")
     frag.coalesce(target).write.mode("overwrite").parquet(out_path)
     return spark.read.parquet(out_path)
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

@@ -16,14 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    REGISTRY, SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_analytics as _an_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _an_mod, "_LOADING_SUBPARTS")
 
 @q("ts_rolling_median_k7", """
 WITH l AS (
@@ -605,10 +599,7 @@ def src_python_datasource(spark, sf_dir):
 
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     return (spark.read.format("pyarrow_parquet")
             .option("path", os.path.join(sf_dir, "supplier.parquet"))
             .option("columns", "s_suppkey,s_nationkey,s_acctbal,s_name")
@@ -629,10 +620,7 @@ def src_python_datasource_writer(spark, sf_dir):
     bugs in the writer fail the hash."""
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = (load_table(spark, sf_dir, "orders")
           .where(F.col("o_orderkey") % 7 == 0)
           .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -1867,7 +1855,7 @@ def stream_state_reader(spark, sf_dir):
     store's shuffle partitions, O(keys) rows."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
@@ -1907,10 +1895,7 @@ def src_pyds_filter_pushdown(spark, sf_dir):
 
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     return (spark.read.format("pyarrow_parquet")
             .option("path", os.path.join(sf_dir, "orders.parquet"))
             .load()
@@ -2030,6 +2015,3 @@ def sql_scripting_while_loop(spark, sf_dir):
           END WHILE;
           SELECT n AS n_orders, cents AS total_cents;
         END""")
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

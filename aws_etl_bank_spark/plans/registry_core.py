@@ -1,11 +1,9 @@
 """Flagship, aggregations, windows, joins, field transforms, set ops, scalars, nested restructuring, API-surface promotions — registry entries (formerly registry.py lines 89-1423).
 
 Pure mechanical move out of the single-module ``plans/registry.py``
-(VERDICT r14 task 8): entry source, ``@q`` names, oracles, and the
-REGISTRY insertion order are byte-identical to the pre-split layout —
-``plans/registry.py`` imports the four part modules in the original
-line order.  Do NOT import part modules directly; import
-``aws_etl_bank_spark.plans.registry`` (all parts register on import).
+(VERDICT r14 task 8): entry source, ``@q`` names and oracles are
+byte-identical to the pre-split layout.  REGISTRY order comes from
+``registry.PARTS`` (see ``registry.load_registry``).
 """
 
 from __future__ import annotations
@@ -19,13 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    REGISTRY, SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (ADVICE r15; shared body since r16) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _registry_mod, "_LOADING_PARTS")
 
 # ===========================================================================
 # Flagship (SURVEY.md §3.1)
@@ -1373,6 +1366,3 @@ def catalog_schema_fetch(spark, sf_dir):
     schema = ctx.get_catalog_schema_as_spark_schema("golden", "customer_c")
     rows = [(f.name, f.dataType.simpleString()) for f in schema.fields]
     return spark.createDataFrame(rows, "col_name string, col_type string")
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

@@ -1,11 +1,9 @@
 """SQL-dialect surfaces (scripting, parameterized SQL, PIVOT, collations, crypto), canary, r15 window/session/validation entries — registry entries (formerly registry.py lines 8370-end).
 
 Pure mechanical move out of the single-module ``plans/registry.py``
-(VERDICT r14 task 8): entry source, ``@q`` names, oracles, and the
-REGISTRY insertion order are byte-identical to the pre-split layout —
-``plans/registry.py`` imports the four part modules in the original
-line order.  Do NOT import part modules directly; import
-``aws_etl_bank_spark.plans.registry`` (all parts register on import).
+(VERDICT r14 task 8): entry source, ``@q`` names and oracles are
+byte-identical to the pre-split layout.  REGISTRY order comes from
+``registry.PARTS`` (see ``registry.load_registry``).
 """
 
 from __future__ import annotations
@@ -19,19 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    REGISTRY, SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (ADVICE r15; shared body since r16) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _registry_mod, "_LOADING_PARTS")
-
-# _unordered_sample_invariants (defined in registry_core) is imported
-# LAZILY inside the one entry that uses it: a module-level import here
-# would make a direct `import registry_core` crash mid-chain on the
-# partially-initialized module (core -> registry tail -> dialect ->
-# back into still-executing core).
 
 # ===========================================================================
 # r14 SQL-surface sweep: conditional/boolean aggregates, parameterized &
@@ -954,6 +941,3 @@ def sketch_kll_quantile_band(spark, sf_dir):
         F.expr("kll_sketch_get_quantile_bigint(sk, 0.9)")
         .between(F.col("bands")[2], F.col("bands")[3])
         .alias("p90_in_band"))
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

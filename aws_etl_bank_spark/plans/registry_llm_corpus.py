@@ -1,9 +1,9 @@
 """LLM registry part 1: batch dedup / ANN / text-quality / multimodal
 entries (formerly registry_llm.py lines 15-971).  Pure mechanical move
 (VERDICT r15 task 7, same precedent as the r15 registry.py split):
-entry source, ``@q`` names, oracles, and REGISTRY insertion order are
-byte-identical to the pre-split layout — ``plans/registry_llm.py``
-imports the three part modules in the original line order.
+entry source, ``@q`` names and oracles are byte-identical to the
+pre-split layout.  REGISTRY order comes from ``registry.PARTS`` (see
+``registry.load_registry``).
 """
 
 from __future__ import annotations
@@ -15,14 +15,6 @@ from aws_etl_bank_spark.plans.registry import q  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
 
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_llm as _llm_mod  # noqa: E402
-
-_registry_mod.require_part_loading(
-    __name__, _llm_mod, "_LOADING_PARTS",
-    sanctioned="aws_etl_bank_spark.plans.registry_llm")
 
 _EN = "('the','a','of','and','to','in','is','it','that','for')"
 
@@ -1196,7 +1188,3 @@ def multimodal_decode_gif(spark, sf_dir):
         canon("mean_r").alias("mean_r"),
         canon("mean_g").alias("mean_g"),
         canon("mean_b").alias("mean_b"))
-
-# terminal registration stamp — see registry.check_parts_registered
-from aws_etl_bank_spark.plans.registry import REGISTRY as _REGISTRY_DICT  # noqa: E402
-_REGISTERED_INTO = id(_REGISTRY_DICT)

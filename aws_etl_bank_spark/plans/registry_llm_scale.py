@@ -12,20 +12,11 @@ from pyspark.sql import Window  # noqa: F401
 from aws_etl_bank_spark.plans.registry import q  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
-
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_llm as _llm_mod  # noqa: E402
-
-_registry_mod.require_part_loading(
-    __name__, _llm_mod, "_LOADING_PARTS",
-    sanctioned="aws_etl_bank_spark.plans.registry_llm")
-
-from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: E402,F401
+from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: F401
     _planted_corpus)
-from aws_etl_bank_spark.plans.registry_llm_stream import (  # noqa: E402,F401
+from aws_etl_bank_spark.plans.registry_llm_stream import (  # noqa: F401
     _events_stream_dir)
+
 
 @q("graph_pagerank", """
 WITH e AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + 1000000 AS s
@@ -1739,10 +1730,7 @@ def stream_pyds_arrow_sink(spark, sf_dir):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     stream = events_stream(spark, _events_stream_dir(sf_dir)).select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -1845,7 +1833,3 @@ def stream_state_store_read(spark, sf_dir):
     return (st.select(
         F.col("key.k").alias("k"),
         F.col(f"value.{value_field}").cast("bigint").alias("n")))
-
-# terminal registration stamp — see registry.check_parts_registered
-from aws_etl_bank_spark.plans.registry import REGISTRY as _REGISTRY_DICT  # noqa: E402
-_REGISTERED_INTO = id(_REGISTRY_DICT)

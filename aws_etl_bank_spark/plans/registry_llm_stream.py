@@ -12,17 +12,7 @@ from pyspark.sql import Window  # noqa: F401
 from aws_etl_bank_spark.plans.registry import q  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
-
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_llm as _llm_mod  # noqa: E402
-
-_registry_mod.require_part_loading(
-    __name__, _llm_mod, "_LOADING_PARTS",
-    sanctioned="aws_etl_bank_spark.plans.registry_llm")
-
-from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: E402,F401
+from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: F401
     _ANN_K, _ANN_TOPK_INVARIANT_ORACLE, _EN, _ann_topk_invariants)
 
 # ===========================================================================
@@ -206,10 +196,7 @@ def stream_pyds_shard_source(spark, sf_dir):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, prepare_shards)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -263,10 +250,7 @@ def stream_pyds_manifest_sink(spark, sf_dir):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     stream = events_stream(spark, _events_stream_dir(sf_dir)).select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -1714,7 +1698,3 @@ def dedup_fuzzy_entity_planted(spark, sf_dir):
                                 on_nonconverged="raise").select(
         F.col("id").cast("long").alias("id"),
         F.col("component").cast("long").alias("component"))
-
-# terminal registration stamp — see registry.check_parts_registered
-from aws_etl_bank_spark.plans.registry import REGISTRY as _REGISTRY_DICT  # noqa: E402
-_REGISTERED_INTO = id(_REGISTRY_DICT)

@@ -1,11 +1,9 @@
 """JDBC/Derby, RDD source, count actions, CMS/HLL/KMV sketches, schema smoke, decimal-exact TPC-H family — registry entries (formerly registry.py lines 1424-4381).
 
 Pure mechanical move out of the single-module ``plans/registry.py``
-(VERDICT r14 task 8): entry source, ``@q`` names, oracles, and the
-REGISTRY insertion order are byte-identical to the pre-split layout —
-``plans/registry.py`` imports the four part modules in the original
-line order.  Do NOT import part modules directly; import
-``aws_etl_bank_spark.plans.registry`` (all parts register on import).
+(VERDICT r14 task 8): entry source, ``@q`` names and oracles are
+byte-identical to the pre-split layout.  REGISTRY order comes from
+``registry.PARTS`` (see ``registry.load_registry``).
 """
 
 from __future__ import annotations
@@ -19,13 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    REGISTRY, SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (ADVICE r15; shared body since r16) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _registry_mod, "_LOADING_PARTS")
 
 # ===========================================================================
 # JDBC over embedded Derby (the driver ships in Spark's own jars dir), RDD
@@ -2966,7 +2959,7 @@ def stream_kmv_distinct(spark, sf_dir):
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming import for_each_batch
 
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     collected: list = []
@@ -2988,6 +2981,3 @@ def stream_kmv_distinct(spark, sf_dir):
     tru = (load_table(spark, sf_dir, "events")
            .agg(F.count_distinct("user_id").alias("true_distinct")))
     return est.crossJoin(F.broadcast(tru))
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

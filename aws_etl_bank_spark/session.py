@@ -62,7 +62,9 @@ RUNTIME_CONFS = {
     # re-check adds nothing; with this off, repeated streaming runs
     # measure flat (2.9-3.0 s) instead of drifting up (3.4→4.0+ s).
     # Durable always-on streams on non-checksummed object stores should
-    # re-enable it per query via writeStream options.
+    # re-enable it: it is a SQLConf, not a writeStream option, and each
+    # query reads it when it starts, so set it with spark.conf.set(...)
+    # before calling start().
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 

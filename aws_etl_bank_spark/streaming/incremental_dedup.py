@@ -46,6 +46,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from aws_etl_bank_spark.durable import atomic_write
 from aws_etl_bank_spark.llm.dedup import band_rows_matches, minhash_band_index
 
 
@@ -102,31 +103,6 @@ def _require_local_dir(state_dir: str) -> None:
             "local path: state discovery and commit markers are "
             "driver-local os operations; use a local directory, or back "
             "the kept/index state with a transactional table")
-
-
-def _write_marker(marker: str, payload: str | None = None) -> None:
-    """Commit marker write, made as durable as a local filesystem
-    allows: content (if any) fsynced, publication via atomic rename,
-    then the parent directory fsynced so the rename itself is on disk.
-    DURABILITY CONTRACT (r16 advice): this makes the MARKER power-loss
-    safe, but the parquet state files beneath it are written by Spark's
-    committer, which does NOT fsync — after an OS crash a fsynced
-    marker may therefore still cover incompletely-flushed data files.
-    The protocol is process-crash-safe; full power-loss safety needs a
-    journaling filesystem with ordered data writes or a transactional
-    table format."""
-    tmp = marker + ".__tmp__"
-    with open(tmp, "w") as f:
-        if payload is not None:
-            f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, marker)
-    dfd = os.open(os.path.dirname(marker), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
 
 
 def _committed_state_dirs(state_dir: str,
@@ -268,9 +244,9 @@ def _compact(spark: SparkSession, state_dir: str, upto_batch: int,
          .bucketBy(n_buckets, bcols[0], *bcols[1:])
          .sortBy(bcols[0], *bcols[1:])
          .option("path", os.path.join(vdir, leaf)).saveAsTable(tbl))
-    _write_marker(os.path.join(vdir, _COMMIT_MARKER),
-                  json.dumps({"upto_batch": upto_batch,
-                              "n_buckets": n_buckets}))
+    atomic_write(os.path.join(vdir, _COMMIT_MARKER),
+                 json.dumps({"upto_batch": upto_batch,
+                             "n_buckets": n_buckets}))
     # GC: full sweep of everything at-or-below the new waterline —
     # this round's inputs AND anything a crashed earlier GC or an
     # absorbed-batch replay left behind.  Marker removed FIRST so a
@@ -362,8 +338,11 @@ def stream_dedup_against_index(stream: DataFrame, state_dir: str,
     ``state_dir`` must be a fresh local directory, or the same
     (state_dir, checkpoint) pair as the run being resumed.  Durability
     is process-crash-level: markers are fsynced and rename-published
-    (``_write_marker``), but Spark's committer does not fsync the
-    parquet payload beneath them.
+    (``durable.atomic_write``), but Spark's committer does not fsync
+    the parquet payload beneath them — after an OS crash a marker may
+    cover incompletely-flushed data files; full power-loss safety needs
+    a journaling filesystem with ordered data writes or a transactional
+    table format.
 
     ``observer(batch_id, n_rows, wall_s)``, when given, is called after
     each non-empty micro-batch commits its state dir (compaction time
@@ -472,7 +451,7 @@ def stream_dedup_against_index(stream: DataFrame, state_dir: str,
                 os.path.join(out, "index"))
             survivors.write.mode("overwrite").parquet(
                 os.path.join(out, "kept"))
-            _write_marker(marker)
+            atomic_write(marker)
             if len(_committed_state_dirs(
                     state_dir, below_batch=batch_id + 1,
                     above_batch=upto)) >= compact_every:

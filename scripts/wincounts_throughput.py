@@ -29,7 +29,6 @@ def main():
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
     import pyspark.sql.functions as F
-    from pyspark.sql.window import Window
 
     from aws_etl_bank_spark.session import get_spark
     from aws_etl_bank_spark.sources.testdata import load_table
@@ -58,8 +57,7 @@ def main():
     # watermarks need TimestampType; load_table may surface ts as NTZ
     # (same dtype guard as sources.testdata.events_stream)
     if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        import pyspark.sql.functions as F2
-        stream = stream.withColumn("ts", F2.col("ts").cast("timestamp"))
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = windowed_event_counts(stream, "6 hours", watermark="12 hours")
     ck = os.path.join(scratch, f"ck_{int(time.time())}")
     name = f"wc_tp_{int(time.time()) % 1_000_000}"
@@ -74,20 +72,30 @@ def main():
     data_batches = [p for p in prog if p["numInputRows"] > 0]
     lat = [p["batchDuration"] / 1000.0 for p in data_batches]
     rows = sum(p["numInputRows"] for p in data_batches)
-    # update-mode memory sink holds the LAST emission per key group;
-    # cross-check the window/type count against the batch truth
-    emitted = spark.table(name).select("window_start", "event_type") \
-        .distinct().count()
-    truth = (events.groupBy(F.window("ts", "6 hours"), "event_type")
-             .count().count())
+    # the update-mode memory sink keeps every emission; a group's
+    # running count only grows, so its last emission is its max.  Check
+    # groups AND counts against a batch groupBy over the same events
+    # (ts cast as in the stream)
+    last = (spark.table(name).groupBy("window_start", "event_type")
+            .agg(F.max("n_events").alias("n_events")))
+    truth = (events.withColumn("ts", F.col("ts").cast("timestamp"))
+             .groupBy(F.window("ts", "6 hours")["start"].alias("window_start"),
+                      "event_type")
+             .agg(F.count("*").alias("n_events")))
+    emitted = last.count()
+    truth_groups = truth.count()
+    count_mismatches = (last.exceptAll(truth).count()
+                        + truth.exceptAll(last).count())
     out = {
         "metric": "windowed_event_counts_throughput",
         "sf_dir": sf_dir,
         "rows": rows,
         "batches": len(data_batches),
         "distinct_window_groups_emitted": emitted,
-        "distinct_window_groups_truth": truth,
-        "groups_match": emitted == truth,
+        "distinct_window_groups_truth": truth_groups,
+        "groups_match": emitted == truth_groups,
+        "count_mismatches": count_mismatches,
+        "counts_match": count_mismatches == 0,
         "wall_s": round(wall, 2),
         "rows_per_s": round(rows / wall, 1),
         "batch_latency_s": {

@@ -133,6 +133,59 @@ def test_bookmark_store_incremental(scratch, spark):
     assert [os.path.basename(p) for p in second] == ["c.csv"]
 
 
+def test_bookmark_commit_survives_a_torn_write(tmp_path, monkeypatch):
+    """A commit that dies partway through writing the state file must
+    leave the previous bookmark state loadable: a torn file would make
+    the next BookmarkStore(...) raise, so the job could not start."""
+    import builtins
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.csv").write_text("x\n1\n")
+    state = str(tmp_path / "bookmarks.json")
+    store = BookmarkStore(state)
+    store.filter_new_files("ctx1", str(src / "*.csv"))
+    store.commit()
+
+    (src / "b.csv").write_text("x\n2\n")
+    store.filter_new_files("ctx1", str(src / "*.csv"))
+    real_open = builtins.open
+
+    class TornFile:
+        """Writes half of the first chunk, then fails like a full disk."""
+
+        def __init__(self, fh):
+            self._fh = fh
+
+        def write(self, data):
+            self._fh.write(data[:len(data) // 2])
+            self._fh.flush()
+            raise OSError("disk full")
+
+        def __getattr__(self, name):
+            return getattr(self._fh, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        fh = real_open(file, mode, *args, **kwargs)
+        return TornFile(fh) if "w" in mode else fh
+
+    monkeypatch.setattr(builtins, "open", torn_open)
+    with pytest.raises(OSError, match="disk full"):
+        store.commit()
+    monkeypatch.undo()
+
+    reloaded = BookmarkStore(state)
+    new = reloaded.filter_new_files("ctx1", str(src / "*.csv"))
+    assert [os.path.basename(p) for p in new] == ["b.csv"]
+    assert sorted(os.listdir(tmp_path)) == ["bookmarks.json", "src"]
+
+
 def test_get_resolved_options_and_legacy_translation():
     out = getResolvedOptions(
         ["--JOB_NAME", "j1", "--my_arg=5", "--continuation-option",
@@ -197,10 +250,7 @@ def test_pyarrow_parquet_datasource_row_group_partitions(spark, tmp_path):
                     "b": [f"s{i}" for i in range(1000)],
                     "c": [float(i) for i in range(1000)]})
     pq.write_table(tbl, path, row_group_size=250)
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = (spark.read.format("pyarrow_parquet")
           .option("path", path).option("columns", "a,c").load())
     assert df.columns == ["a", "c"]

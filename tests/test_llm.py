@@ -1965,7 +1965,7 @@ def _mk_topk(spark, rows):
 def test_ann_topk_invariants_pass_on_well_formed_result(spark):
     """r15: the shape-contract helper behind the converted ANN entries
     must read all-true on a correct top-k result."""
-    from aws_etl_bank_spark.plans.registry_llm import _ann_topk_invariants
+    from aws_etl_bank_spark.plans.registry_llm_corpus import _ann_topk_invariants
 
     k = 3
     rows = [(q, 100 + q * 10 + r, r, 1.0 - 0.1 * r)
@@ -1984,7 +1984,7 @@ def test_ann_topk_invariants_catch_each_violation_class(spark):
     """The review scenarios: compensating duplicate ranks, NULL scores,
     fabricated neighbors, and out-of-range scores must each flip their
     flag — the contract is only worth a driver slot if it can fail."""
-    from aws_etl_bank_spark.plans.registry_llm import _ann_topk_invariants
+    from aws_etl_bank_spark.plans.registry_llm_corpus import _ann_topk_invariants
 
     corpus = spark.createDataFrame(
         [(i,) for i in range(100, 140)], "vec_id long")
@@ -2045,7 +2045,7 @@ def test_minhash_pair_invariants_pass_and_catch_violations(spark):
     on the REAL operator's output, and each corruption class must flip
     its own column."""
     from aws_etl_bank_spark.llm import minhash_lsh_pairs
-    from aws_etl_bank_spark.plans.registry_llm import _minhash_pair_invariants
+    from aws_etl_bank_spark.plans.registry_llm_corpus import _minhash_pair_invariants
 
     docs = _planted_dup_docs(spark)
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", num_perm=64,
@@ -2082,7 +2082,7 @@ def test_minhash_pair_invariants_pass_and_catch_violations(spark):
 
 def test_dedup_keep_invariants_pass_and_catch_violations(spark):
     from aws_etl_bank_spark.llm import minhash_dedup_keep
-    from aws_etl_bank_spark.plans.registry_llm import _dedup_keep_invariants
+    from aws_etl_bank_spark.plans.registry_llm_corpus import _dedup_keep_invariants
 
     docs = _planted_dup_docs(spark)
     kept = minhash_dedup_keep(docs, "text", "doc_id", num_perm=64,
@@ -2122,7 +2122,7 @@ def test_dedup_keep_invariants_pass_and_catch_violations(spark):
 
 def test_simhash_pair_invariants_pass_and_catch_violations(spark):
     from aws_etl_bank_spark.llm import simhash_lsh_pairs
-    from aws_etl_bank_spark.plans.registry_llm import _simhash_pair_invariants
+    from aws_etl_bank_spark.plans.registry_llm_corpus import _simhash_pair_invariants
 
     docs = _planted_dup_docs(spark)
     pairs = simhash_lsh_pairs(docs, "text", "doc_id", max_hamming=8)
@@ -2154,7 +2154,7 @@ def test_simhash_pair_invariants_pass_and_catch_violations(spark):
 
 def test_semantic_pair_invariants_pass_and_catch_violations(spark):
     from aws_etl_bank_spark.llm import semantic_dedup_pairs
-    from aws_etl_bank_spark.plans.registry_llm import _semantic_pair_invariants
+    from aws_etl_bank_spark.plans.registry_llm_stream import _semantic_pair_invariants
 
     import math
     rows = []

@@ -59,7 +59,7 @@ def test_scalar_exists_decorrelated_plan(spark):
     constant predicate pushed to the scan; no per-row nested loop."""
     import aws_etl_bank_spark.plans.registry as reg
 
-    df = reg.REGISTRY["scalar_exists_subqueries"].fn(
+    df = reg.load_registry()["scalar_exists_subqueries"].fn(
         spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistenceJoin" in plan
@@ -158,10 +158,7 @@ def test_python_datasource_writer_roundtrip(spark, tmp_path):
 
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = spark.range(100).selectExpr("id", "id * 2 AS v",
                                      "CAST(id AS STRING) AS s")
     path = str(tmp_path / "out")
@@ -223,11 +220,11 @@ def test_arrow_entries_plan_shapes(spark):
     import aws_etl_bank_spark.plans.registry as reg
 
     sf = "/root/testdata/sf0.001"
-    plan = (reg.REGISTRY["arrow_udf_scalar"].fn(spark, sf)
+    plan = (reg.load_registry()["arrow_udf_scalar"].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("Exchange") == 0 and "ArrowEval" in plan
 
-    plan2 = (reg.REGISTRY["arrow_grouped_apply"].fn(spark, sf)
+    plan2 = (reg.load_registry()["arrow_grouped_apply"].fn(spark, sf)
              ._jdf.queryExecution().executedPlan().toString())
     assert plan2.count("Exchange") == 1
     assert "FlatMapGroupsInArrow" in plan2
@@ -244,10 +241,7 @@ def test_python_streaming_datasource_exactly_once(spark, tmp_path):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, prepare_shards)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(ShardedStreamDataSource)
     df = spark.range(300).selectExpr("id AS event_id", "id % 7 AS k")
     path = str(tmp_path / "shards")
     total = prepare_shards(df, path, shards=3, order_col="event_id")
@@ -284,10 +278,7 @@ def test_python_streaming_sink_manifest_commit(spark, tmp_path):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(ShardedStreamDataSource)
     df = spark.range(200).selectExpr("id AS event_id", "id % 5 AS k")
     feed = str(tmp_path / "feed")
     df.repartition(3).write.parquet(feed)
@@ -380,7 +371,7 @@ def test_pipe_syntax_lowers_to_pushed_scan(spark):
     import aws_etl_bank_spark.plans.registry as reg
 
     sf = "/root/testdata/sf0.001"
-    df = reg.REGISTRY["sql_pipe_syntax_pricing"].fn(spark, sf)
+    df = reg.load_registry()["sql_pipe_syntax_pricing"].fn(spark, sf)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "LessThanOrEqual(l_shipdate" in plan      # pushed to parquet
@@ -453,10 +444,7 @@ def test_pyds_push_filters_end_to_end(spark, tmp_path):
     tbl = pa.table({"k": [1, 2, 3, None, 5, 6],
                     "s": ["a", "b", "a", "a", None, "a"]})
     pq.write_table(tbl, path)
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = (spark.read.format("pyarrow_parquet").option("path", path)
           .load().filter("k > 1 AND s = 'a'"))
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -492,10 +480,7 @@ def test_pyds_push_filters_in_predicate(spark, tmp_path):
     assert list(r.pushFilters([In(("k",), (10, 1500))])) == []
     assert [p.value for p in r.partitions()] == [0, 1]  # group 2 pruned
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = (spark.read.format("pyarrow_parquet").option("path", path)
           .load().filter("k IN (10, 1500, 99999)"))
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -512,10 +497,7 @@ def test_arrow_streaming_sink_manifest_commit(spark, tmp_path):
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(ShardedStreamDataSource)
     df = spark.range(200).selectExpr("id AS event_id", "id % 5 AS k")
     feed = str(tmp_path / "feed")
     df.repartition(3).write.parquet(feed)
@@ -641,10 +623,7 @@ def test_pyds_float_column_nan_rows_survive_spark_filter(spark, tmp_path):
     pq.write_table(pa.table({
         "d": pa.array([1.0, float("nan"), 7.5, None], pa.float64()),
         "k": pa.array([1, 2, 3, 4], pa.int64())}), path)
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PyArrowParquetDataSource)
     got = (spark.read.format("pyarrow_parquet").option("path", path)
            .load().filter("d > 5.0").orderBy("k").collect())
     assert [r.k for r in got] == [2, 3]

@@ -171,17 +171,18 @@ def test_tpch_plans_have_the_right_shape(spark):
     per-partition top-k, never a global sort); q5's five dims must all
     broadcast; no TPC-H entry may fall back to a sort-merge join at
     this scale."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
     sf = "/root/testdata/sf0.001"
-    q3 = REGISTRY["tpch_q3_shipping_priority"].fn(spark, sf)
+    q3 = registry["tpch_q3_shipping_priority"].fn(spark, sf)
     p3 = q3._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in p3
-    q5 = REGISTRY["tpch_q5_local_supplier_volume"].fn(spark, sf)
+    q5 = registry["tpch_q5_local_supplier_volume"].fn(spark, sf)
     p5 = q5._jdf.queryExecution().executedPlan().toString()
     assert p5.count("BroadcastHashJoin") == 5
     for name in ("tpch_q1_pricing_summary", "tpch_q18_large_volume_customer"):
-        p = REGISTRY[name].fn(spark, sf)._jdf.queryExecution() \
+        p = registry[name].fn(spark, sf)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "SortMergeJoin" not in p, name
 
@@ -194,17 +195,18 @@ def test_tpch_completion_set_plan_shape(spark):
     recomputed the whole eligible subtree on both sides); Q21's
     EXISTS/NOT-EXISTS rewrite must carry no join beyond the supplier
     broadcast (the per-order counts are windows, not self-joins)."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
     sf = "/root/testdata/sf0.001"
     for name in ("tpch_q2_min_cost_supplier", "tpch_q9_product_type_profit",
                  "tpch_q19_disjunctive_revenue",
                  "tpch_q20_potential_promotion", "tpch_q21_waiting_supplier"):
-        p = REGISTRY[name].fn(spark, sf)._jdf.queryExecution() \
+        p = registry[name].fn(spark, sf)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "SortMergeJoin" not in p, name
         assert "CartesianProduct" not in p, name
-    p2 = REGISTRY["tpch_q2_min_cost_supplier"].fn(spark, sf) \
+    p2 = registry["tpch_q2_min_cost_supplier"].fn(spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert p2.count("FileScan parquet") == 5  # lineitem once + 4 dims
     # Q17/Q18's correlated aggregates are windows too: lineitem must be
@@ -212,12 +214,12 @@ def test_tpch_completion_set_plan_shape(spark):
     # Q17's old all-parts cuts broadcast could not broadcast at scale)
     import re
     for name in ("tpch_q17_small_quantity", "tpch_q18_large_volume_customer"):
-        p = REGISTRY[name].fn(spark, sf)._jdf.queryExecution() \
+        p = registry[name].fn(spark, sf)._jdf.queryExecution() \
             .executedPlan().toString()
         li_scans = [s for s in re.findall(r"FileScan parquet \[([^\]#]*)", p)
                     if s.startswith("l_")]
         assert len(li_scans) == 1, name
-    p21 = REGISTRY["tpch_q21_waiting_supplier"].fn(spark, sf) \
+    p21 = registry["tpch_q21_waiting_supplier"].fn(spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert p21.count("Window") == 1  # both per-order counts share one window
 
@@ -227,15 +229,15 @@ def test_new_sampling_and_rollup_plan_shape(spark):
     (TakeOrderedAndProject), never a global sort; ts_active_users_7d
     must broadcast the day dimension and contain no nested-loop join
     (the naive interval-join form would be one)."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
     sf = "/root/testdata/sf0.001"
-    pw = REGISTRY["sample_weighted_priority"].fn(spark, sf) \
+    pw = registry["sample_weighted_priority"].fn(spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in pw
     assert "Sort " not in pw
-    pa = REGISTRY["ts_active_users_7d"].fn(spark, sf) \
+    pa = registry["ts_active_users_7d"].fn(spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in pa
     assert "CartesianProduct" not in pa
@@ -245,10 +247,10 @@ def test_triangle_fixture_invariants(spark):
     """One lazy plan: every join is a hash equi-join except the two
     bounded single-row count cross-joins; the planted hub must close
     some but not most edges."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    df = REGISTRY["graph_triangle_count"].fn(spark, "/root/testdata/sf0.001")
+    df = registry["graph_triangle_count"].fn(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -260,13 +262,14 @@ def test_velocity_windows_share_one_exchange_and_sort(spark):
     """Both RANGE frames (1 h and 24 h) key on (user_id, us) — the plan
     must evaluate them over ONE exchange and ONE sort, not one per
     frame."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    p = REGISTRY["feature_velocity_windows"].fn(spark, "/root/testdata/sf0.001") \
+    p = registry["feature_velocity_windows"].fn(spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") == 1
     assert p.count("Sort ") == 1
-    pd_ = REGISTRY["feature_decayed_velocity"].fn(spark, "/root/testdata/sf0.001") \
+    pd_ = registry["feature_decayed_velocity"].fn(spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert pd_.count("Exchange") == 1
     assert pd_.count("Sort ") == 1
@@ -275,10 +278,10 @@ def test_velocity_windows_share_one_exchange_and_sort(spark):
 def test_per_group_sample_uses_window_group_limit(spark):
     """The rank<=k filter must push into WindowGroupLimit so map tasks
     forward only k rows per group before the shuffle."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    p = REGISTRY["sample_per_group_bottomk"].fn(spark, "/root/testdata/sf0.001") \
+    p = registry["sample_per_group_bottomk"].fn(spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in p
     assert p.count("Exchange") == 1
@@ -289,13 +292,13 @@ def test_ols_matches_numpy(spark):
     the same features (independent solver, same data)."""
     import numpy as np
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
     from aws_etl_bank_spark.sources.testdata import load_table
     import pyspark.sql.functions as F
 
     sf = "/root/testdata/sf0.001"
-    got = REGISTRY["ml_ols_closed_form"].fn(spark, sf).collect()[0]
+    got = registry["ml_ols_closed_form"].fn(spark, sf).collect()[0]
     f = load_table(spark, sf, "events").select(
         (F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
          - 19723).alias("x1"),
@@ -314,10 +317,10 @@ def test_interval_overlap_no_nested_loop(spark):
     """The banded interval-overlap join must stay a hash equi-join on
     (day, bucket) — a BroadcastNestedLoopJoin means the non-equi form
     leaked through."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    p = REGISTRY["join_interval_overlap"].fn(spark, "/root/testdata/sf0.001") \
+    p = registry["join_interval_overlap"].fn(spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
@@ -327,9 +330,10 @@ def test_distribute_sort_by_plan_is_local_sort(spark):
     """DISTRIBUTE BY / SORT BY must plan as one hash Exchange plus a
     partition-LOCAL sort — a global Sort or range Exchange means the
     dialect lowered to ORDER BY semantics by mistake."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    p = REGISTRY["sql_distribute_sort_by"].fn(
+    p = registry["sql_distribute_sort_by"].fn(
         spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(o_orderstatus" in p
@@ -340,9 +344,10 @@ def test_distribute_sort_by_plan_is_local_sort(spark):
 def test_named_window_clause_single_window_operator(spark):
     """Three functions over one named WINDOW spec must plan as ONE
     Window node (one shuffle + one sort), not three."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    p = REGISTRY["sql_named_window_clause"].fn(
+    p = registry["sql_named_window_clause"].fn(
         spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
     assert p.count("Window [") == 1, p
@@ -354,10 +359,11 @@ def test_udtf_analyze_rejects_non_literal_width(spark):
     time (plan construction), never mid-job on an executor."""
     import pytest
 
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
     # registering the UDTF is a side effect of running the entry once
-    REGISTRY["udtf_polymorphic_analyze"].fn(
+    registry["udtf_polymorphic_analyze"].fn(
         spark, "/root/testdata/sf0.001").collect()
     with pytest.raises(Exception, match="(?i)literal|constant"):
         spark.sql("""
@@ -372,9 +378,10 @@ def test_session_variable_folds_to_pushed_filter(spark):
     time so the comparison reaches the parquet scan as a pushed
     filter — if it stayed an unresolved variable node the filter would
     evaluate post-scan."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    df = REGISTRY["sql_session_variables"].fn(
+    df = registry["sql_session_variables"].fn(
         spark, "/root/testdata/sf0.001")
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice" in p, p
@@ -386,9 +393,10 @@ def test_session_window_batch_plan_single_exchange(spark):
     with a map-side partial aggregate — the whole point over the
     window-then-regroup double pass.  At 100 TB a second exchange here
     would dominate the query."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
-    df = REGISTRY["agg_session_window_batch"].fn(spark, SF_SMOKE)
+    df = registry["agg_session_window_batch"].fn(spark, SF_SMOKE)
     plan = _plan(df)
     assert plan.count("Exchange") == 1, plan
     assert "partial_count" in plan  # map-side combine before the shuffle

@@ -727,13 +727,13 @@ def test_bitmap_retention_equals_exact_counts(spark):
     an approximation."""
     import pyspark.sql.functions as F
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
     from aws_etl_bank_spark.sources.testdata import load_table
 
     sf = "/root/testdata/sf0.001"
     got = {r.day: (r.dau, r.returned_next_day)
-           for r in REGISTRY["scale_bitmap_retention"].fn(spark, sf).collect()}
+           for r in registry["scale_bitmap_retention"].fn(spark, sf).collect()}
     ev = load_table(spark, sf, "events") \
         .select(F.to_date("ts").alias("day"), "user_id").distinct()
     exact_dau = {r.day: r.c for r in
@@ -847,11 +847,11 @@ def test_compaction_reduces_file_count(spark):
     size-targeted handful out (tiny table → exactly 1), data identical."""
     import os
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
-    from aws_etl_bank_spark.plans.registry import REGISTRY, _scratch
+    from aws_etl_bank_spark.plans.registry import _scratch, load_registry
+    registry = load_registry()
 
     sf = "/root/testdata/sf0.001"
-    out = REGISTRY["maintenance_compact_small_files"].fn(spark, sf)
+    out = registry["maintenance_compact_small_files"].fn(spark, sf)
     n_rows = out.count()
     frag = _scratch(sf, "supplier_fragmented")
     comp = _scratch(sf, "supplier_compacted")
@@ -994,11 +994,12 @@ def test_bucket_pruned_read_scans_one_bucket(spark):
     bucket column must prune the scan to ONE of the 8 buckets
     (SelectedBucketsCount in the FileScan node) — the no-index point
     lookup the bucketed layout buys."""
-    from aws_etl_bank_spark.plans.registry import REGISTRY
+    from aws_etl_bank_spark.plans.registry import load_registry
+    registry = load_registry()
 
     from tests.conftest import SF_SMOKE
 
-    df = REGISTRY["scale_bucket_pruned_read"].fn(spark, SF_SMOKE)
+    df = registry["scale_bucket_pruned_read"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount: 1 out of 8" in plan, plan
 

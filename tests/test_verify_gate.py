@@ -161,9 +161,9 @@ def test_duplicate_registry_name_raises():
     its driver evidence); the decorator now refuses collisions."""
     import pytest
 
-    from aws_etl_bank_spark.plans.registry import REGISTRY, q
+    from aws_etl_bank_spark.plans.registry import load_registry, q
 
-    existing = next(iter(REGISTRY))
+    existing = next(iter(load_registry()))
     with pytest.raises(ValueError, match="duplicate registry entry"):
         @q(existing)
         def shadow(spark, sf_dir):  # pragma: no cover
@@ -268,12 +268,11 @@ def test_fuzzy_ed1_blocked_oracle_equals_brute_force():
     from a brute-force pair set inside the same DuckDB session and
     assert bitwise-equal results at the driver SF."""
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
     con = _duck_sf0_01()
     shipped = con.sql(
         "SELECT * FROM ({}) ORDER BY bucket".format(
-            reg.REGISTRY["dedup_fuzzy_ed1_pairs"].oracle)).fetchall()
+            reg.load_registry()["dedup_fuzzy_ed1_pairs"].oracle)).fetchall()
     brute = con.sql("""
         WITH pairs AS (
           SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
@@ -306,9 +305,8 @@ def test_fuzzy_entity_oracle_converged_and_matches_recursive():
        closure over the brute-force O(n²) levenshtein edge set, which
        is still tractable at the driver SF (500 nodes)."""
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
-    oracle = reg.REGISTRY["dedup_fuzzy_entity_ids"].oracle
+    oracle = reg.load_registry()["dedup_fuzzy_entity_ids"].oracle
     assert oracle.rstrip().endswith("FROM l10")
     con = _duck_sf0_01()
     shipped = con.sql(
@@ -333,35 +331,43 @@ def test_fuzzy_entity_oracle_converged_and_matches_recursive():
     assert shipped == recursive
 
 
-def test_registry_part_modules_reject_direct_import():
-    """ADVICE r15: importing a part module directly still *worked* but
-    registered its entries after the other parts', silently reordering
-    REGISTRY (which the driver rotation window and COVERAGE.md ledger
-    index into).  The prohibition was docstring-only; now each part
-    raises ImportError unless registry.py's _LOADING_PARTS sentinel is
-    set.  Needs a clean interpreter (the modules are already imported
-    in this test process), hence the subprocess."""
+#: sha256 of the 395 registry names joined by newlines, in REGISTRY
+#: order — the order the driver rotation window and COVERAGE.md index
+REGISTRY_ORDER_SHA256 = (
+    "26f98423b74c48cc8d127082ebe5a488d4bf18dbe47f7813407c2ce88029e437")
+
+
+def _registry_order_digest(names) -> str:
+    import hashlib
+
+    return hashlib.sha256("\n".join(names).encode()).hexdigest()
+
+
+def test_registry_order_is_pinned_whatever_imports_first():
+    """REGISTRY order is computed from registry.PARTS, not from import
+    order: it must equal the pinned order in this process and in a
+    fresh interpreter that imports the LAST part module directly
+    before anything else (which would register that part's entries
+    first)."""
+    import os
     import subprocess
-    import sys
 
+    from aws_etl_bank_spark.plans.registry import load_registry
+
+    names = list(load_registry())
+    assert len(names) == 395
+    assert _registry_order_digest(names) == REGISTRY_ORDER_SHA256
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
         [sys.executable, "-c",
-         "import sys; sys.path.insert(0, '/root/repo'); "
-         "import aws_etl_bank_spark.plans.registry_dialect"],
-        capture_output=True, text=True, timeout=120)
-    assert proc.returncode != 0
-    assert "must not be imported directly" in proc.stderr
-
-    # and the sanctioned path still yields the full registry
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         "import sys; sys.path.insert(0, '/root/repo'); "
-         "import aws_etl_bank_spark.plans.registry as r; "
-         "import aws_etl_bank_spark.plans.registry_llm; "
-         "print(len(r.REGISTRY))"],
-        capture_output=True, text=True, timeout=120)
+         "import aws_etl_bank_spark.plans.registry_llm_scale; "
+         "from aws_etl_bank_spark.plans.registry import load_registry; "
+         "print('\\n'.join(load_registry()))"],
+        capture_output=True, text=True, timeout=120, cwd=repo)
     assert proc.returncode == 0, proc.stderr[-500:]
-    assert int(proc.stdout.strip()) >= 395
+    fresh = proc.stdout.splitlines()
+    assert _registry_order_digest(fresh) == REGISTRY_ORDER_SHA256
 
 
 def test_fuzzy_entity_oracle_converged_at_audit_scale():
@@ -381,9 +387,8 @@ def test_fuzzy_entity_oracle_converged_at_audit_scale():
     if not os.path.exists(sf1):
         pytest.skip("no .scratch/sf1 fixture on this box")
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
-    oracle = reg.REGISTRY["dedup_fuzzy_entity_ids"].oracle
+    oracle = reg.load_registry()["dedup_fuzzy_entity_ids"].oracle
     assert oracle.rstrip().endswith("FROM l10")
     body = oracle[:oracle.rindex("SELECT")]
     con = duckdb.connect()

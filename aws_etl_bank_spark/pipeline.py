@@ -97,24 +97,29 @@ def banking_pipeline(spark, raw_dir: str, golden_dir: str, engine_ctx=None,
                      database: str = "golden", fidelity: bool = False) -> Pipeline:
     """The reference's kietl lifecycle as engine stages: transform the raw
     zone (CSV dims → SCD2 parquet + fact snapshot) then register every
-    golden table in the catalog (the crawler's job, done synchronously)."""
+    golden table in the catalog (the crawler's job, done synchronously;
+    the fact with its ``p_year`` partition key)."""
     from aws_etl_bank_spark.context import EngineContext
     from aws_etl_bank_spark.plans.flagship import BANKING_DIM_TABLES, run_banking_etl
 
     ectx = engine_ctx or EngineContext(spark)
 
     def transform(ctx: dict):
+        """Write the dims and the fact; the result is the fact's row
+        count, observed during its write, so the fact plan runs once."""
         fact = run_banking_etl(spark, raw_dir, golden_dir, fidelity=fidelity, write=True)
-        ctx["fact_rows"] = fact.count()
+        ctx["fact_rows"] = fact.written_rows
         return ctx["fact_rows"]
 
     def register(ctx: dict):
         registered = []
-        for table in list(BANKING_DIM_TABLES) + ["fact_snapshot_daily_transaction"]:
-            path = f"{golden_dir}/dim_{table}" if table in BANKING_DIM_TABLES \
-                else f"{golden_dir}/{table}"
-            ectx.catalog.crawl(spark, database, table, path)
+        for table in BANKING_DIM_TABLES:
+            ectx.catalog.crawl(spark, database, table, f"{golden_dir}/dim_{table}")
             registered.append(table)
+        fact = "fact_snapshot_daily_transaction"
+        ectx.catalog.crawl(spark, database, fact, f"{golden_dir}/{fact}",
+                           partition_keys=["p_year"])
+        registered.append(fact)
         ctx["registered"] = registered
         return registered
 

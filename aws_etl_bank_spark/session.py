@@ -16,28 +16,37 @@ posture explicit and add the knobs that matter at 100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
-#: Runtime confs applied both at build time and (idempotently) to sessions
-#: handed to us by an external driver.  All are runtime-settable.
-RUNTIME_CONFS = {
+log = logging.getLogger(__name__)
+
+#: Runtime confs the engine's results or paths depend on; a session that
+#: refuses one would run, but wrong, so applying them raises on failure.
+REQUIRED_CONFS = {
+    # the flagship SQL's implicit string→double casts (see module doc)
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
     # Spark 4.1 gates DataSourceReader.pushFilters behind this flag and
     # HARD-FAILS a reader that implements it while the flag is off —
     # the engine's Python connector (sources/pyds.py) prunes row
     # groups from pushed filters, so the flag is part of its contract
     "spark.sql.python.filterPushdown.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Some producers (e.g. DuckDB/Arrow) write TIMESTAMP(NANOS) parquet,
     # which Spark rejects by default; read them as nano-longs and convert
     # (see sources.testdata.load_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+#: Tuning confs: a session that refuses one runs the same queries with
+#: different plans, so a failure is logged and the run goes on.
+OPTIONAL_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
     # autoBucketedScan only ever DISABLES bucketed reading, and its
     # benefit rule considers shuffle removal, not bucket PRUNING: with
     # it on, a filtered scan with no downstream join/agg is planned
@@ -68,16 +77,25 @@ RUNTIME_CONFS = {
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
+#: Both sets, applied at build time and (idempotently) to sessions handed
+#: to us by an external driver.  All are runtime-settable.
+RUNTIME_CONFS = {**REQUIRED_CONFS, **OPTIONAL_CONFS}
+
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an externally-built session."""
-    for k, v in RUNTIME_CONFS.items():
+    """Apply the engine's runtime confs to an externally-built session:
+    a required conf that cannot be set raises, an optional one is
+    logged and skipped."""
+    for k, v in REQUIRED_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not settable at runtime in this build — keep going; the
-            # queries themselves avoid depending on any single optional conf.
-            pass
+        except Exception as e:
+            raise RuntimeError(f"required Spark conf {k}={v} could not be set") from e
+    for k, v in OPTIONAL_CONFS.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as e:  # noqa: BLE001 — tuning only, see OPTIONAL_CONFS
+            log.warning("optional Spark conf %s=%s not applied: %s", k, v, e)
     return spark
 
 

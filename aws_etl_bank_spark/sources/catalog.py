@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.types as T
 from pyspark.sql import SparkSession
 
+from aws_etl_bank_spark.durable import atomic_write
+
 
 @dataclass
 class CatalogTable:
@@ -105,8 +107,7 @@ class Catalog:
             }
             for (db, name), t in self._tables.items()
         }
-        with open(self.state_path, "w") as fh:
-            json.dump(payload, fh, indent=1)
+        atomic_write(self.state_path, json.dumps(payload, indent=1))
 
     def _load(self):
         with open(self.state_path) as fh:

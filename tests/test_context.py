@@ -133,27 +133,14 @@ def test_bookmark_store_incremental(scratch, spark):
     assert [os.path.basename(p) for p in second] == ["c.csv"]
 
 
-def test_bookmark_commit_survives_a_torn_write(tmp_path, monkeypatch):
-    """A commit that dies partway through writing the state file must
-    leave the previous bookmark state loadable: a torn file would make
-    the next BookmarkStore(...) raise, so the job could not start."""
+def _tear_writes(monkeypatch):
+    """Every file opened for writing from now on takes half of its first
+    chunk, then fails like a full disk."""
     import builtins
 
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.csv").write_text("x\n1\n")
-    state = str(tmp_path / "bookmarks.json")
-    store = BookmarkStore(state)
-    store.filter_new_files("ctx1", str(src / "*.csv"))
-    store.commit()
-
-    (src / "b.csv").write_text("x\n2\n")
-    store.filter_new_files("ctx1", str(src / "*.csv"))
     real_open = builtins.open
 
     class TornFile:
-        """Writes half of the first chunk, then fails like a full disk."""
-
         def __init__(self, fh):
             self._fh = fh
 
@@ -176,6 +163,23 @@ def test_bookmark_commit_survives_a_torn_write(tmp_path, monkeypatch):
         return TornFile(fh) if "w" in mode else fh
 
     monkeypatch.setattr(builtins, "open", torn_open)
+
+
+def test_bookmark_commit_survives_a_torn_write(tmp_path, monkeypatch):
+    """A commit that dies partway through writing the state file must
+    leave the previous bookmark state loadable: a torn file would make
+    the next BookmarkStore(...) raise, so the job could not start."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.csv").write_text("x\n1\n")
+    state = str(tmp_path / "bookmarks.json")
+    store = BookmarkStore(state)
+    store.filter_new_files("ctx1", str(src / "*.csv"))
+    store.commit()
+
+    (src / "b.csv").write_text("x\n2\n")
+    store.filter_new_files("ctx1", str(src / "*.csv"))
+    _tear_writes(monkeypatch)
     with pytest.raises(OSError, match="disk full"):
         store.commit()
     monkeypatch.undo()
@@ -184,6 +188,25 @@ def test_bookmark_commit_survives_a_torn_write(tmp_path, monkeypatch):
     new = reloaded.filter_new_files("ctx1", str(src / "*.csv"))
     assert [os.path.basename(p) for p in new] == ["b.csv"]
     assert sorted(os.listdir(tmp_path)) == ["bookmarks.json", "src"]
+
+
+def test_catalog_save_survives_a_torn_write(tmp_path, monkeypatch):
+    """A table registration that dies partway through saving the catalog
+    must leave the previous tables loadable: a torn catalog.json would
+    make the next Catalog(...) raise, losing every registered table."""
+    state = str(tmp_path / "catalog.json")
+    Catalog(state).create_table("golden", "t1", "/data/t1", partition_keys=["p_year"])
+
+    catalog = Catalog(state)
+    _tear_writes(monkeypatch)
+    with pytest.raises(OSError, match="disk full"):
+        catalog.create_table("golden", "t2", "/data/t2")
+    monkeypatch.undo()
+
+    reloaded = Catalog(state)
+    assert reloaded.get_tables("golden") == ["t1"]
+    assert reloaded.get_table("golden", "t1").partition_keys == ["p_year"]
+    assert sorted(os.listdir(tmp_path)) == ["catalog.json"]
 
 
 def test_get_resolved_options_and_legacy_translation():

@@ -850,3 +850,46 @@ def test_session_pins_checkpoint_file_checksum_off():
 
     assert RUNTIME_CONFS[
         "spark.sql.streaming.checkpoint.fileChecksum.enabled"] == "false"
+
+
+class _RefusingConf:
+    """``spark.conf`` of a session that refuses to set ``refused``."""
+
+    def __init__(self, refused):
+        self.refused, self.values = refused, {}
+
+    def set(self, key, value):
+        if key == self.refused:
+            raise RuntimeError(f"Cannot modify the value of {key}")
+        self.values[key] = value
+
+
+class _StubSession:
+    def __init__(self, refused):
+        self.conf = _RefusingConf(refused)
+
+
+@pytest.mark.parametrize("key", [
+    "spark.sql.ansi.enabled",  # the flagship SQL's implicit string→double casts
+    "spark.sql.session.timeZone",
+    "spark.sql.python.filterPushdown.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+])
+def test_required_conf_failure_raises(key):
+    """A session that refuses a conf the engine's results depend on must
+    not run the engine."""
+    from aws_etl_bank_spark.session import apply_runtime_confs
+
+    with pytest.raises(RuntimeError, match=f"required Spark conf {key}"):
+        apply_runtime_confs(_StubSession(key))
+
+
+def test_optional_conf_failure_is_logged_and_skipped(caplog):
+    from aws_etl_bank_spark.session import RUNTIME_CONFS, apply_runtime_confs
+
+    refused = "spark.sql.adaptive.skewJoin.enabled"
+    stub = _StubSession(refused)
+    with caplog.at_level("WARNING", logger="aws_etl_bank_spark.session"):
+        apply_runtime_confs(stub)
+    assert refused in caplog.text
+    assert stub.conf.values == {k: v for k, v in RUNTIME_CONFS.items() if k != refused}

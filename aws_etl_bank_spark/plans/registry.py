@@ -18,6 +18,10 @@ from __future__ import annotations
 
 import importlib
 import os
+import re
+import shutil
+import time
+import uuid
 from dataclasses import dataclass
 from typing import Callable
 
@@ -84,6 +88,34 @@ def _scratch(sf_dir: str, leaf: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     path = os.path.join(SCRATCH, tag, leaf)
     os.makedirs(os.path.dirname(path), exist_ok=True)
+    return path
+
+
+#: age after which a per-run scratch leaf is swept by a later run
+_RUN_LEAF_MAX_AGE_S = 1800
+
+
+def _scratch_run(sf_dir: str, prefix: str) -> str:
+    """A fresh scratch leaf ``<prefix>_<hex>`` for one run's checkpoint
+    or sink; same-prefix siblings older than 30 minutes are removed.
+
+    The leaf cannot be deleted when the entry returns (the returned
+    frame reads it lazily, after the entry exits) nor be a fixed name
+    (two runs at the same SF would race), so growth is bounded by the
+    runs of the last half hour, and a live concurrent run's leaf is
+    never touched."""
+    path = _scratch(sf_dir, f"{prefix}_{uuid.uuid4().hex}")
+    # a uuid hex, or the millisecond stamp earlier runs used
+    stamped = re.compile(re.escape(prefix) + r"_([0-9a-f]{32}|[0-9]{13})")
+    cutoff = time.time() - _RUN_LEAF_MAX_AGE_S
+    for entry in os.scandir(os.path.dirname(path)):
+        if not stamped.fullmatch(entry.name):
+            continue
+        try:
+            if entry.stat(follow_symlinks=False).st_mtime < cutoff:
+                shutil.rmtree(entry.path, ignore_errors=True)
+        except OSError:
+            pass  # raced with a concurrent sweep that removed it
     return path
 
 

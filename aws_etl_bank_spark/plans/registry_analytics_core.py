@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch, _scratch_run)
 
 
 @q("ts_ohlc_bucket", """
@@ -456,8 +456,6 @@ def stream_heavy_hitters(spark, sf_dir):
     the rest near-unique) puts the hubs far above the guarantee
     threshold, so the streamed result equals the batch oracle's
     brute-force top-10 exactly."""
-    import time as _time
-
     from aws_etl_bank_spark.functions.scale import heavy_hitters_topk
     from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
@@ -487,8 +485,7 @@ def stream_heavy_hitters(spark, sf_dir):
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"hh_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "hh_ckpt"),
         "availableNow": True,
     })
     cand = spark.createDataFrame([(int(k),) for k in state], "key long")
@@ -1109,8 +1106,6 @@ def stream_batch_unified(spark, sf_dir):
     modes of a batch→stream cutover.  The live path stays distributed
     end-to-end (micro-batches append to files; nothing corpus-sized
     crosses the driver)."""
-    import time as _time
-
     from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming import for_each_batch
@@ -1119,7 +1114,7 @@ def stream_batch_unified(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     hist = (ev.filter(F.to_date("ts") < cut)
             .select("event_id", F.to_date("ts").alias("day")))
-    sink = _scratch(sf_dir, f"kappa_sink_{int(_time.time() * 1000)}")
+    sink = _scratch_run(sf_dir, "kappa_sink")
 
     def handle(batch_df, batch_id):
         (batch_df.filter(F.to_date("ts") >= F.date_sub(cut, 1))
@@ -1129,8 +1124,7 @@ def stream_batch_unified(spark, sf_dir):
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"kappa_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "kappa_ckpt"),
         "availableNow": True,
     })
     live = spark.read.parquet(sink)
@@ -1356,8 +1350,6 @@ def stream_ohlc_incremental(spark, sf_dir):
     no arrival-order dependence (proof: events arrive in file order,
     not time order, and the result still hash-matches the BATCH
     oracle, shared verbatim with ts_ohlc_bucket)."""
-    import time as _time
-
     import pyspark.sql.types as T
 
     from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
@@ -1385,8 +1377,7 @@ def stream_ohlc_incremental(spark, sf_dir):
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"ohlc_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "ohlc_ckpt"),
         "availableNow": True,
     })
     key_t = T.StructType([T.StructField("ts", T.TimestampType()),
@@ -1437,8 +1428,6 @@ def csv_malformed_policy(spark, sf_dir):
     good-row checksum from the source table — a policy regression
     (silent row loss in PERMISSIVE, leakage in DROPMALFORMED, a
     miscounted rescue column) moves a number."""
-    import time as _time
-
     cust = (load_table(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") <= 1000))
     lines = cust.select(F.when(
@@ -1448,7 +1437,7 @@ def csv_malformed_policy(spark, sf_dir):
         .otherwise(F.concat_ws(",", F.col("c_custkey").cast("string"),
                                (F.col("c_custkey") * 2).cast("string")))
         .alias("value"))
-    path = _scratch(sf_dir, f"csv_malformed_{int(_time.time() * 1000)}")
+    path = _scratch_run(sf_dir, "csv_malformed")
     lines.write.mode("overwrite").text(path)
     schema = "id long, amount long, _corrupt string"
     # Spark forbids referencing the rescue column on the raw CSV

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch, _scratch_run)
 
 
 @q("ts_rolling_median_k7", """
@@ -105,7 +105,6 @@ def stream_avro_ingest(spark, sf_dir):
     boundaries included.  Decode is Arrow-batched per micro-batch;
     nothing corpus-sized crosses the driver."""
     import json as _json
-    import time as _time
 
     from aws_etl_bank_spark.sources.avro import (from_avro_datum,
                                                  to_avro_datum)
@@ -123,7 +122,7 @@ def stream_avro_ingest(spark, sf_dir):
                    out_col="payload")
      .select("payload").repartition(3)
      .write.mode("overwrite").parquet(src))
-    sink = _scratch(sf_dir, f"avro_stream_sink_{int(_time.time() * 1000)}")
+    sink = _scratch_run(sf_dir, "avro_stream_sink")
 
     def handle(batch_df, batch_id):
         dec = from_avro_datum(batch_df, "payload", schema, out_col="rec")
@@ -135,8 +134,7 @@ def stream_avro_ingest(spark, sf_dir):
               .option("maxFilesPerTrigger", 1).parquet(src))
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"avro_stream_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "avro_stream_ckpt"),
         "availableNow": True,
     })
     out = spark.read.parquet(sink)
@@ -1853,19 +1851,14 @@ def stream_state_reader(spark, sf_dir):
     batch GROUP BY, pinning that checkpointed state is complete and
     readable offline.  Scale: the state read is partitioned by the
     store's shuffle partitions, O(keys) rows."""
-    import time as _time
-
     from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
+    from aws_etl_bank_spark.streaming import run_to_memory
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     counts = stream.groupBy("user_id").count()
-    ck = _scratch(sf_dir, f"state_reader_ck_{int(_time.time() * 1000)}")
-    name = f"state_reader_{int(_time.time() * 1000) % 10_000_000}"
-    query = (counts.writeStream.format("memory").queryName(name)
-             .outputMode("update").option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    ck = _scratch_run(sf_dir, "state_reader_ck")
+    run_to_memory(counts, "update", ck)
     state = spark.read.format("statestore").load(ck)
     return state.select(F.col("key.user_id").alias("user_id"),
                         F.col("value.count").cast("long").alias("n_events"))

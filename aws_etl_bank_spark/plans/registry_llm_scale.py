@@ -9,7 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
-from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.plans.registry import _scratch_run, q  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
 from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: F401
@@ -150,8 +150,6 @@ def stream_incremental_dedup(spark, sf_dir):
     kept set provably equals batch-global exact dedup with
     lowest-id-wins — the oracle, which the copies make non-trivial
     (all 25 must be rejected by the cross-batch index join)."""
-    import time as _time
-
     from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming.incremental_dedup import (
         stream_dedup_against_index)
@@ -169,10 +167,9 @@ def stream_incremental_dedup(spark, sf_dir):
             _os.path.join(sf_dir, "documents.parquet")))
     stream = (spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 1).parquet(feed_dir))
-    tag = int(_time.time() * 1000)
     kept = stream_dedup_against_index(
-        stream, _scratch(sf_dir, f"dedup_state_{tag}"),
-        checkpoint=_scratch(sf_dir, f"dedup_ckpt_{tag}"))
+        stream, _scratch_run(sf_dir, "dedup_state"),
+        checkpoint=_scratch_run(sf_dir, "dedup_ckpt"))
     return kept.select(F.col("doc_id").cast("long"))
 
 
@@ -639,14 +636,11 @@ def stream_quantile_sketch(spark, sf_dir):
     sketch_quantile_binned checks.  THE mergeable-sketch streaming
     story: per-day/per-batch sketches roll up without re-touching
     history (an exact percentile would re-sort everything per batch)."""
-    import time as _time
-
     import pyspark.sql.types as T
 
     from aws_etl_bank_spark.functions.scale import (quantile_estimate,
                                                     quantile_merge)
     from aws_etl_bank_spark.functions.scale import quantile_sketch as qsk
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming import for_each_batch
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
@@ -658,8 +652,7 @@ def stream_quantile_sketch(spark, sf_dir):
 
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"qsk_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "qsk_ckpt"),
         "availableNow": True,
     })
     schema = T.StructType([T.StructField("bin", T.LongType()),
@@ -1724,9 +1717,6 @@ def stream_pyds_arrow_sink(spark, sf_dir):
     manifest-listed parquet; exactly-once all-or-nothing publication
     is the hash-checked property (per-user totals over the sink equal
     the batch aggregate)."""
-    import time as _time
-
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
@@ -1735,9 +1725,8 @@ def stream_pyds_arrow_sink(spark, sf_dir):
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         .alias("cents"))
-    stamp = int(_time.time() * 1000)
-    sink = _scratch(sf_dir, f"pyds_arrow_sink_{stamp}")
-    ck = _scratch(sf_dir, f"pyds_arrow_ck_{stamp}")
+    sink = _scratch_run(sf_dir, "pyds_arrow_sink")
+    ck = _scratch_run(sf_dir, "pyds_arrow_ck")
     q = (stream.writeStream.format("sharded_stream")
          .option("path", sink).option("arrowSink", "true")
          .option("checkpointLocation", ck)
@@ -1771,41 +1760,14 @@ def stream_state_store_read(spark, sf_dir):
     agg buffer column is version-internal).  At 100 TB state reads
     are per-partition parallel scans of the store files — no stream
     replay, no driver fan-in."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
+    from aws_etl_bank_spark.streaming import run_to_memory
 
-    from aws_etl_bank_spark.plans.registry import _scratch
-
-    stamp = int(_time.time() * 1000)
-    ck = _scratch(sf_dir, f"state_reader_ck_{stamp}")
-    # ADVICE r15: the stamped checkpoint leaf made every invocation
-    # leave a dir behind — unbounded .scratch growth across verify and
-    # bench runs.  The leaf cannot simply be deleted in a finally block
-    # (the returned DataFrame reads the store LAZILY, after this
-    # function exits) nor reused as a fixed name (two verify processes
-    # at the same SF would race), so each invocation instead sweeps
-    # SIBLING checkpoints older than 30 minutes: growth is bounded by
-    # the number of concurrent runs, and a live concurrent run's dir
-    # is never touched.
-    for old in _glob.glob(os.path.join(os.path.dirname(ck),
-                                       "state_reader_ck_*")):
-        try:
-            if old != ck and os.path.getmtime(old) < _time.time() - 1800:
-                _shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass  # raced with a concurrent sweep — another run owns it
+    ck = _scratch_run(sf_dir, "state_reader_ck")
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     agg = (stream
            .select((F.col("user_id") % 101).cast("bigint").alias("k"))
            .groupBy("k").agg(F.count(F.lit(1)).alias("n")))
-    name = f"ssr_mem_{stamp % 10_000_000}"
-    query = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete")
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    run_to_memory(agg, "complete", ck)
 
     meta = spark.read.format("state-metadata").load(ck)
     ops = [r.operatorName for r in meta.select("operatorName").collect()]

@@ -9,7 +9,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
-from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.plans.registry import _scratch_run, q  # noqa: F401
+from aws_etl_bank_spark.streaming import run_to_memory
+from aws_etl_bank_spark.streaming.tws import rocksdb_state_store
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
 from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: F401
@@ -50,20 +52,11 @@ def stream_window_counts(spark, sf_dir):
     """Watermarked tumbling-window aggregation executed as a real
     Structured Streaming query (availableNow → memory sink), so the
     streaming path itself is under the correctness gate."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming import windowed_event_counts
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     agg = windowed_event_counts(stream, "6 hours", watermark="12 hours")
-    name = f"stream_win_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(agg, "complete")
 
 
 @q("stream_sessionize", """
@@ -105,20 +98,11 @@ def stream_stateful_counts(spark, sf_dir):
     micro-batches, update-mode memory sink.  The cumulative count is
     batch-partitioning-invariant — max per user == total — so the result
     is oracle-checkable despite the streaming execution."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming import stateful_user_counts
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
-    counts = stateful_user_counts(stream)
-    name = f"stateful_counts_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        counts.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(stateful_user_counts(stream), "update")
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
     )
@@ -144,30 +128,12 @@ def stream_tws_running_totals(spark, sf_dir):
     n_events) equals the batch aggregate.  State lives in the store —
     per key only two int64s round-trip per batch — so state scales
     with keys, not events: the 100 TB unbounded-stream shape."""
-    import time as _time
+    from aws_etl_bank_spark.streaming.tws import running_user_totals_tws
 
-    from aws_etl_bank_spark.streaming.tws import (
-        ROCKSDB_PROVIDER, ensure_worker_protobuf, running_user_totals_tws)
-
-    ensure_worker_protobuf(spark)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
+    with rocksdb_state_store(spark):
         stream = events_stream(spark, _events_stream_dir(sf_dir))
-        totals = running_user_totals_tws(stream)
-        name = f"tws_totals_{int(_time.time() * 1000) % 10_000_000}"
-        query = (totals.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                           prev)
-    return (spark.table(name).groupBy("user_id")
+        sunk = run_to_memory(running_user_totals_tws(stream), "update")
+    return (sunk.groupBy("user_id")
             .agg(F.max("n_events").alias("n_events"),
                  F.max_by("cents", "n_events").alias("cents")))
 
@@ -191,6 +157,7 @@ def stream_pyds_shard_source(spark, sf_dir):
     sink equal the batch aggregate — delivery bugs (loss, dupes,
     slice misalignment) fail the hash."""
     import time as _time
+    import uuid
 
     from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
@@ -212,17 +179,24 @@ def stream_pyds_shard_source(spark, sf_dir):
               .option("maxRecordsPerBatch",
                       max(1, total // 4 // 3 + 1))
               .load())
-    name = f"pyds_shard_{int(_time.time() * 1000) % 10_000_000}"
+    # Not run_to_memory: the rate-limited processingTime batches are
+    # what exercise the shard offset contract, so this stays a
+    # multi-batch run that is polled until every record has landed.
+    name = f"pyds_shard_{uuid.uuid4().hex}"
     query = (stream.writeStream.format("memory").queryName(name)
              .outputMode("append")
              .trigger(processingTime="1 seconds").start())
-    deadline = _time.time() + 300
-    while _time.time() < deadline:
-        if spark.table(name).count() >= total:
-            break
-        _time.sleep(0.5)
-    query.stop()
-    return (spark.table(name).groupBy("user_id")
+    try:
+        deadline = _time.time() + 300
+        while _time.time() < deadline:
+            if spark.table(name).count() >= total:
+                break
+            _time.sleep(0.5)
+        sunk = spark.table(name)
+    finally:
+        query.stop()
+        spark.catalog.dropTempView(name)
+    return (sunk.groupBy("user_id")
             .agg(F.count("*").alias("n_events"),
                  F.sum("cents").alias("cents")))
 
@@ -244,9 +218,6 @@ def stream_pyds_manifest_sink(spark, sf_dir):
     files.  Exactly-once all-or-nothing batch publication is the
     hash-checked property: per-user totals over the sink must equal
     the batch aggregate."""
-    import time as _time
-
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
@@ -255,9 +226,8 @@ def stream_pyds_manifest_sink(spark, sf_dir):
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         .alias("cents"))
-    stamp = int(_time.time() * 1000)
-    sink = _scratch(sf_dir, f"pyds_manifest_sink_{stamp}")
-    ck = _scratch(sf_dir, f"pyds_manifest_ck_{stamp}")
+    sink = _scratch_run(sf_dir, "pyds_manifest_sink")
+    ck = _scratch_run(sf_dir, "pyds_manifest_ck")
     q = (stream.writeStream.format("sharded_stream")
          .option("path", sink).option("checkpointLocation", ck)
          .outputMode("append").trigger(availableNow=True).start())
@@ -283,30 +253,12 @@ def stream_tws_minmax_rows(spark, sf_dir):
     iterators at the Python boundary: per-user running (min, max,
     count).  Completes the TWS API matrix next to the three pandas
     entries; same max-marker final-state contract."""
-    import time as _time
+    from aws_etl_bank_spark.streaming.tws import user_minmax_tws_rows
 
-    from aws_etl_bank_spark.streaming.tws import (
-        ROCKSDB_PROVIDER, ensure_worker_protobuf, user_minmax_tws_rows)
-
-    ensure_worker_protobuf(spark)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
+    with rocksdb_state_store(spark):
         stream = events_stream(spark, _events_stream_dir(sf_dir))
-        mm = user_minmax_tws_rows(stream)
-        name = f"tws_mm_{int(_time.time() * 1000) % 10_000_000}"
-        query = (mm.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                           prev)
-    return (spark.table(name).groupBy("user_id")
+        sunk = run_to_memory(user_minmax_tws_rows(stream), "update")
+    return (sunk.groupBy("user_id")
             .agg(F.max_by("lo", "n_events").alias("lo"),
                  F.max_by("hi", "n_events").alias("hi"),
                  F.max("n_events").alias("n_events")))
@@ -332,32 +284,13 @@ def stream_tws_topk_list(spark, sf_dir):
     (rank, cents) pairs are deterministic under ties (equal values get
     consecutive ranks), so the DuckDB row_number oracle hash-matches
     despite its arbitrary tie ordering."""
-    import time as _time
-
-    from aws_etl_bank_spark.streaming.tws import (
-        ROCKSDB_PROVIDER, ensure_worker_protobuf, user_topk_values_tws)
-
-    ensure_worker_protobuf(spark)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
-        stream = events_stream(spark, _events_stream_dir(sf_dir))
-        topk = user_topk_values_tws(stream, k=3)
-        name = f"tws_topk_{int(_time.time() * 1000) % 10_000_000}"
-        query = (topk.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                           prev)
     from pyspark.sql import Window as W
 
-    sunk = spark.table(name)
+    from aws_etl_bank_spark.streaming.tws import user_topk_values_tws
+
+    with rocksdb_state_store(spark):
+        stream = events_stream(spark, _events_stream_dir(sf_dir))
+        sunk = run_to_memory(user_topk_values_tws(stream, k=3), "update")
     mx = F.max("n_seen").over(W.partitionBy("user_id"))
     return (sunk.withColumn("_mx", mx)
             .where(F.col("n_seen") == F.col("_mx"))
@@ -376,32 +309,13 @@ def stream_tws_type_counts_map(spark, sf_dir):
     vendored protobuf codec.  Each batch emits the user's whole
     current map with an n_seen marker; max-n_seen rows per user are
     the final counts, batch-split-invariant."""
-    import time as _time
-
-    from aws_etl_bank_spark.streaming.tws import (
-        ROCKSDB_PROVIDER, ensure_worker_protobuf, user_type_counts_tws)
-
-    ensure_worker_protobuf(spark)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
-        stream = events_stream(spark, _events_stream_dir(sf_dir))
-        counts = user_type_counts_tws(stream)
-        name = f"tws_map_{int(_time.time() * 1000) % 10_000_000}"
-        query = (counts.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                           prev)
     from pyspark.sql import Window as W
 
-    sunk = spark.table(name)
+    from aws_etl_bank_spark.streaming.tws import user_type_counts_tws
+
+    with rocksdb_state_store(spark):
+        stream = events_stream(spark, _events_stream_dir(sf_dir))
+        sunk = run_to_memory(user_type_counts_tws(stream), "update")
     mx = F.max("n_seen").over(W.partitionBy("user_id"))
     return (sunk.withColumn("_mx", mx)
             .where(F.col("n_seen") == F.col("_mx"))
@@ -417,11 +331,8 @@ def stream_foreach_batch(spark, sf_dir):
     batch) roll up to batch-split-invariant per-type totals, so the result
     is oracle-checkable even though execution is micro-batched; the
     per-batch behavior itself is asserted in tests/test_streaming.py."""
-    import time as _time
-
     import pyspark.sql.types as T
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming import for_each_batch
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
@@ -437,7 +348,7 @@ def stream_foreach_batch(spark, sf_dir):
         "windowSize": "1 seconds",
         # fresh checkpoint per run — a reused checkpoint would mark the
         # input files processed and yield an empty second run
-        "checkpointLocation": _scratch(sf_dir, f"feb_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "feb_ckpt"),
         "availableNow": True,
     })
     schema = T.StructType([
@@ -877,8 +788,6 @@ def stream_stream_join(spark, sf_dir):
     dropped and the append-mode result equals the batch inequality
     join DuckDB computes.  At scale the watermark horizon — not stream
     length — bounds the join state (streaming/joins.py)."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import stream_interval_join
 
     stream_dir = _events_stream_dir(sf_dir)
@@ -896,15 +805,7 @@ def stream_stream_join(spark, sf_dir):
     ).select(
         "click_id", "user_id", F.col("ts").alias("click_ts"),
         "purchase_id", F.col("ts_r").alias("purchase_ts"), "value")
-
-    name = f"stream_ssj_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(joined, "append")
 
 
 @q("stream_dedup_ids", """
@@ -916,8 +817,6 @@ def stream_dedup_ids(spark, sf_dir):
     the exactly-once ingestion pattern.  Exact-mode here (bounded
     replay); the watermarked horizon variant
     (dropDuplicatesWithinWatermark) is unit-tested."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import stream_dedup
 
     stream_dir = _events_stream_dir(sf_dir)
@@ -927,15 +826,7 @@ def stream_dedup_ids(spark, sf_dir):
             "event_id", "event_type", "user_id", "ts", "value")
 
     doubled = mkstream().unionByName(mkstream())
-    deduped = stream_dedup(doubled, ["event_id"])
-    name = f"stream_dd_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(stream_dedup(doubled, ["event_id"]), "append")
 
 
 @q("mix_upsample_by_weight", """
@@ -1044,8 +935,6 @@ def stream_static_enrich(spark, sf_dir):
     enrich_with_static) run as a REAL streaming query: events stream ⋈
     broadcast nation dim (stateless, no watermark needed) → complete-mode
     aggregate → memory sink.  Oracle is the batch equivalent."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import enrich_with_static
 
     stream = (events_stream(spark, _events_stream_dir(sf_dir))
@@ -1057,14 +946,7 @@ def stream_static_enrich(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    name = f"stream_enrich_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(agg, "complete")
 
 
 def _semantic_pair_invariants(pairs, emb, threshold):
@@ -1293,8 +1175,6 @@ def stream_cdc_scd2(spark, sf_dir):
     batch-split- and arrival-order-invariant — exactly the
     max-(ts, event_id) change per key, which is what the oracle checks;
     per-batch history semantics are asserted in tests/test_streaming.py."""
-    import time as _time
-
     from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming.cdc import cdc_apply_scd2
 
@@ -1311,11 +1191,10 @@ def stream_cdc_scd2(spark, sf_dir):
         src_path=_os.path.realpath(_os.path.join(sf_dir, "events.parquet")))
     stream = (spark.readStream.schema(events.schema)
               .option("maxFilesPerTrigger", 1).parquet(feed_dir))
-    run_tag = int(_time.time() * 1000)
     dim = cdc_apply_scd2(
-        stream, _scratch(sf_dir, f"cdc_state_{run_tag}"), key="user_id",
+        stream, _scratch_run(sf_dir, "cdc_state"), key="user_id",
         value_cols=["value", "event_type"],
-        checkpoint=_scratch(sf_dir, f"cdc_ckpt_{run_tag}"))
+        checkpoint=_scratch_run(sf_dir, "cdc_ckpt"))
     return (dim.filter(F.col("is_active"))
             .select("user_id", F.col("event_type").alias("last_event_type"),
                     F.round("value", 2).alias("balance")))

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
-    SCRATCH, canon0, q, _scratch)
+    SCRATCH, canon0, q, _scratch, _scratch_run)
 
 
 # ===========================================================================
@@ -2951,8 +2951,6 @@ def stream_kmv_distinct(spark, sf_dir):
     the batch computation bit-for-bit: the shared batch oracle is the
     proof, exactly like stream_quantile_sketch.  The `true_distinct`
     column rides along for the accuracy story."""
-    import time as _time
-
     import pyspark.sql.types as T
 
     from aws_etl_bank_spark.functions.scale import kmv_estimate, kmv_sketch
@@ -2970,8 +2968,7 @@ def stream_kmv_distinct(spark, sf_dir):
 
     for_each_batch(stream, handle, {
         "windowSize": "1 seconds",
-        "checkpointLocation": _scratch(
-            sf_dir, f"kmv_ckpt_{int(_time.time() * 1000)}"),
+        "checkpointLocation": _scratch_run(sf_dir, "kmv_ckpt"),
         "availableNow": True,
     })
     schema = T.StructType([T.StructField("h", T.LongType())])

@@ -1,5 +1,6 @@
 from aws_etl_bank_spark.streaming.runner import (  # noqa: F401
     for_each_batch,
+    run_to_memory,
     sample_streaming_frame,
     windowed_event_counts,
 )

@@ -6,6 +6,11 @@ interval) + checkpointLocation, persists each batch, skips empty batches,
 retries failed batches with 1/2/5s backoff up to batchMaxRetries (≤100,
 default 3), and emits per-batch numRecords/latency metrics.
 
+``run_to_memory`` is the one lifecycle for the engine's bounded
+streams: it runs a query to completion (availableNow) into a
+uniquely named memory sink, returns the sunk rows as a batch frame,
+and on every exit path stops the query and drops the sink's view.
+
 Beyond the reference (SURVEY.md §2.11 "Not present"): watermarked
 tumbling/sliding/session window aggregations over the ``events`` table —
 stock Structured Streaming, here as reusable plan builders so batch and
@@ -15,6 +20,7 @@ streaming share one definition.
 from __future__ import annotations
 
 import time
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -86,6 +92,31 @@ def for_each_batch(frame: DataFrame, batch_function, options: dict):
     return metrics
 
 
+def run_to_memory(frame: DataFrame, mode: str,
+                  checkpoint: str | None = None) -> DataFrame:
+    """Run a bounded streaming ``frame`` to completion (availableNow)
+    into a memory sink in output ``mode`` and return the sunk rows.
+
+    The query gets a unique name, and is stopped and its view dropped
+    on every exit path, so a run leaves no active query and no table
+    behind.  The returned frame holds the analyzed sink scan, not the
+    view name, so it (and anything built on it) still reads the rows
+    after the drop."""
+    spark = frame.sparkSession
+    name = f"mem_{uuid.uuid4().hex}"
+    writer = (frame.writeStream.format("memory").queryName(name)
+              .outputMode(mode))
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    query = writer.trigger(availableNow=True).start()
+    try:
+        query.awaitTermination()
+        return spark.table(name)
+    finally:
+        query.stop()
+        spark.catalog.dropTempView(name)
+
+
 def sample_streaming_frame(spark: SparkSession, frame: DataFrame, options: dict,
                            batch_function=None) -> DataFrame:
     """Reference context.py:553-599: run the stream into an in-memory
@@ -93,7 +124,10 @@ def sample_streaming_frame(spark: SparkSession, frame: DataFrame, options: dict,
     window_size = _parse_window_size(options.get("windowSize", "1 seconds"))
     polling_ms = int(options.get("pollingTimeInMs", 10000))
     limit = int(options.get("recordPollingLimit", 100))
-    table = f"sample_stream_{int(time.time() * 1000) % 10_000_000}"
+    # Not run_to_memory: the reference polls a processingTime query
+    # until the row limit or the deadline, whichever comes first, so
+    # the stream need not be bounded.
+    table = f"sample_stream_{uuid.uuid4().hex}"
     query = (
         frame.writeStream.format("memory").queryName(table)
         .trigger(processingTime=window_size).start()
@@ -108,6 +142,7 @@ def sample_streaming_frame(spark: SparkSession, frame: DataFrame, options: dict,
         rows = out.collect()
     finally:
         query.stop()
+        spark.catalog.dropTempView(table)
     if batch_function is not None and rows:
         batch_function(spark.createDataFrame(rows, out.schema))
     return spark.createDataFrame(rows, out.schema)

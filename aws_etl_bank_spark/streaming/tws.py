@@ -5,12 +5,13 @@ slots managed by the state store — here a per-user running (count,
 cents) pair carried across micro-batches.
 
 The API requires the RocksDB state-store provider (bundled with Spark —
-no extra jar); callers set
-``spark.sql.streaming.stateStore.providerClass`` before starting the
-query.  State lives in the store, NOT the Python worker: per key only
-the two int64s round-trip per batch, so state size scales with keys,
-not events — the property that makes the operator viable on an
-unbounded 100 TB stream.
+no extra jar); callers build and start their queries inside
+``with rocksdb_state_store(spark):``, which ships the protobuf
+runtime, sets ``spark.sql.streaming.stateStore.providerClass`` and
+restores its previous value on exit.  State lives in the store, NOT
+the Python worker: per key only the two int64s round-trip per batch,
+so state size scales with keys, not events — the property that makes
+the operator viable on an unbounded 100 TB stream.
 
 The container ships no protobuf wheel, and transformWithState's Python
 worker speaks protobuf to the JVM state server
@@ -30,6 +31,7 @@ end-to-end against the JVM's real protobuf parser.  A real
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
@@ -97,6 +99,29 @@ def ensure_worker_protobuf(spark) -> bool:
                 _VENDOR_DIR + ((os.pathsep + prev) if prev else ""))
         sc._graft_protobuf_shipped = True
     return True
+
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextlib.contextmanager
+def rocksdb_state_store(spark):
+    """Run the enclosed block on the RocksDB state-store provider.
+
+    Ships the protobuf runtime first (``ensure_worker_protobuf`` must
+    run before a transformWithState UDF is built), then sets the
+    provider for every query started inside the block; on exit the
+    previous value is restored, or the conf unset if there was none."""
+    ensure_worker_protobuf(spark)
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev)
 
 
 def running_user_totals_tws(events: DataFrame) -> DataFrame:

@@ -36,12 +36,9 @@ def main():
     from aws_etl_bank_spark.session import get_spark
     from aws_etl_bank_spark.sources.testdata import load_table
     from aws_etl_bank_spark.streaming.tws import (
-        ROCKSDB_PROVIDER, ensure_worker_protobuf, running_user_totals_tws)
+        rocksdb_state_store, running_user_totals_tws)
 
     spark = get_spark("tws_throughput")
-    ensure_worker_protobuf(spark)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
 
     events = load_table(spark, sf_dir, "events")
     total = events.count()
@@ -66,15 +63,16 @@ def main():
     stream = (spark.readStream.schema(events.schema.add("__b", "integer"))
               .option("maxFilesPerTrigger", 1)
               .parquet(feed).drop("__b"))
-    totals = running_user_totals_tws(stream)
     ck = os.path.join(scratch, f"ck_{int(time.time())}")
     name = f"tws_tp_{int(time.time()) % 1_000_000}"
-    t0 = time.time()
-    q = (totals.writeStream.format("memory").queryName(name)
-         .outputMode("update").option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    wall = time.time() - t0
+    with rocksdb_state_store(spark):
+        totals = running_user_totals_tws(stream)
+        t0 = time.time()
+        q = (totals.writeStream.format("memory").queryName(name)
+             .outputMode("update").option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        wall = time.time() - t0
 
     prog = q.recentProgress
     data_batches = [p for p in prog if p["numInputRows"] > 0]

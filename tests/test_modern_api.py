@@ -383,15 +383,14 @@ def test_statestore_reader_roundtrips_agg_state(spark, tmp_path):
     """The statestore batch format reads back exactly the committed
     streaming-aggregation state (key/value structs per shuffle
     partition)."""
+    from aws_etl_bank_spark.streaming import run_to_memory
+
     feed = str(tmp_path / "feed")
     spark.range(100).selectExpr("id % 9 AS k").write.parquet(feed)
     stream = (spark.readStream.schema("k bigint").parquet(feed)
               .groupBy("k").count())
     ck = str(tmp_path / "ck")
-    q = (stream.writeStream.format("memory").queryName("ssr_t")
-         .outputMode("update").option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    run_to_memory(stream, "update", ck)
     state = (spark.read.format("statestore").load(ck)
              .selectExpr("key.k AS k", "value.count AS n"))
     got = {r["k"]: r["n"] for r in state.collect()}

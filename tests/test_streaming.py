@@ -236,12 +236,8 @@ def test_session_stats_streaming_append(spark, scratch):
         .write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src).withWatermark("ts", "0 seconds")
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (sessionize.session_stats(stream, gap="30 minutes")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table(name).collect()
+    got = runner.run_to_memory(
+        sessionize.session_stats(stream, gap="30 minutes"), "append").collect()
     # 6 events 1h apart with a 30-min gap → 6 singleton sessions; all but
     # the last close before the final watermark (max ts)
     assert len(got) == 5
@@ -257,14 +253,10 @@ def test_stateful_user_counts_stream(spark, scratch):
     ).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    name = f"cnt_{uuid.uuid4().hex[:8]}"
-    q = (sessionize.stateful_user_counts(stream)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
+    sunk = runner.run_to_memory(sessionize.stateful_user_counts(stream), "update")
     got = {r["user_id"]: r["n_events"]
-           for r in spark.table(name).groupBy("user_id")
-                         .agg(F.max("n_events").alias("n_events")).collect()}
+           for r in sunk.groupBy("user_id")
+                        .agg(F.max("n_events").alias("n_events")).collect()}
     assert got == {1: 2, 2: 1}
 
 
@@ -322,10 +314,7 @@ def test_stream_dedup_watermark_streaming_path(spark, tmp_path):
         "k int, ts timestamp").write.parquet(src)
     stream = spark.readStream.schema("k int, ts timestamp").parquet(src)
     out = stream_dedup(stream, ["k"], ts_col="ts", watermark="1 hour")
-    q = (out.writeStream.format("memory").queryName("dd_wm_test")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert spark.table("dd_wm_test").count() == 2
+    assert runner.run_to_memory(out, "append").count() == 2
 
 
 def test_windowed_counts_drop_late_data_across_batches(spark, tmp_path):
@@ -366,11 +355,8 @@ def test_windowed_counts_drop_late_data_across_batches(spark, tmp_path):
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
     agg = runner.windowed_event_counts(stream, "1 hour", watermark="1 hour")
-    q = (agg.writeStream.format("memory").queryName("late_drop_test")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
     rows = {r.window_start: r.n_events
-            for r in spark.table("late_drop_test").collect()}
+            for r in runner.run_to_memory(agg, "append").collect()}
     # the straggler was dropped: count 1.  (If this reads 2, the
     # watermark did not advance between batches; if the window is
     # missing entirely, append mode never closed it.)
@@ -852,8 +838,8 @@ def test_tws_runs_with_vendored_protobuf(spark, tmp_path):
     this test pinned the ImportError; it flipped in r12."""
     import pyspark.sql.functions as F
 
-    from aws_etl_bank_spark.streaming.tws import (ROCKSDB_PROVIDER,
-                                                  ensure_worker_protobuf,
+    from aws_etl_bank_spark.streaming.tws import (ensure_worker_protobuf,
+                                                  rocksdb_state_store,
                                                   running_user_totals_tws)
 
     ensure_worker_protobuf(spark)
@@ -870,23 +856,9 @@ def test_tws_runs_with_vendored_protobuf(spark, tmp_path):
     assert totals.schema.simpleString() == \
         "struct<user_id:bigint,n_events:bigint,cents:bigint>"
 
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
-        q = (totals.writeStream.format("memory")
-             .queryName("tws_e2e").outputMode("update")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-    final = (spark.table("tws_e2e").groupBy("user_id")
+    with rocksdb_state_store(spark):
+        sunk = runner.run_to_memory(totals, "update")
+    final = (sunk.groupBy("user_id")
              .agg(F.max("n_events").alias("n"),
                   F.max_by("cents", "n_events").alias("c")))
     got = {r["user_id"]: (r["n"], r["c"]) for r in final.collect()}
@@ -907,10 +879,7 @@ def test_tws_timer_protocol_roundtrip(spark, tmp_path):
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
 
-    from aws_etl_bank_spark.streaming.tws import (ROCKSDB_PROVIDER,
-                                                  ensure_worker_protobuf)
-
-    ensure_worker_protobuf(spark)
+    from aws_etl_bank_spark.streaming.tws import rocksdb_state_store
 
     class TimerProto(StatefulProcessor):
         def init(self, handle):
@@ -943,17 +912,12 @@ def test_tws_timer_protocol_roundtrip(spark, tmp_path):
     feed = str(tmp_path / "feed")
     df.write.parquet(feed)
     stream = spark.readStream.schema(df.schema).parquet(feed)
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TimerProto(),
-        outputStructType=("user_id bigint, n bigint, "
-                          "t_before bigint, t_after bigint"),
-        outputMode="Update", timeMode="ProcessingTime")
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
+    with rocksdb_state_store(spark):
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=TimerProto(),
+            outputStructType=("user_id bigint, n bigint, "
+                              "t_before bigint, t_after bigint"),
+            outputMode="Update", timeMode="ProcessingTime")
         q = (out.writeStream.format("memory").queryName("tws_timer_t")
              .outputMode("update")
              .trigger(processingTime="1 seconds").start())
@@ -963,13 +927,6 @@ def test_tws_timer_protocol_roundtrip(spark, tmp_path):
                 break
             time.sleep(0.5)
         q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
     rows = {r["user_id"]: (r["n"], r["t_before"], r["t_after"])
             for r in spark.table("tws_timer_t").collect()}
     assert rows == {1: (2, 2, 1), 2: (1, 2, 1)}
@@ -984,10 +941,7 @@ def test_tws_initial_state_seeding(spark, tmp_path):
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
 
-    from aws_etl_bank_spark.streaming.tws import (ROCKSDB_PROVIDER,
-                                                  ensure_worker_protobuf)
-
-    ensure_worker_protobuf(spark)
+    from aws_etl_bank_spark.streaming.tws import rocksdb_state_store
 
     class Seeded(StatefulProcessor):
         def init(self, handle):
@@ -1013,29 +967,14 @@ def test_tws_initial_state_seeding(spark, tmp_path):
     feed = str(tmp_path / "feed")
     df.write.parquet(feed)
     stream = spark.readStream.schema(df.schema).parquet(feed)
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Seeded(),
-        outputStructType="user_id bigint, n bigint",
-        outputMode="Update", timeMode="None",
-        initialState=seed.groupBy("user_id"))
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
-        q = (out.writeStream.format("memory").queryName("tws_seeded")
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-    rows = {r["user_id"]: r["n"]
-            for r in spark.table("tws_seeded").collect()}
+    with rocksdb_state_store(spark):
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=Seeded(),
+            outputStructType="user_id bigint, n bigint",
+            outputMode="Update", timeMode="None",
+            initialState=seed.groupBy("user_id"))
+        sunk = runner.run_to_memory(out, "update")
+    rows = {r["user_id"]: r["n"] for r in sunk.collect()}
     # user 1: seed 100 + 2 events; user 2: no seed + 1 event; user 3's
     # seed exists but no stream rows arrive, so nothing is emitted
     assert rows == {1: 102, 2: 1}
@@ -1055,10 +994,7 @@ def test_tws_event_time_timer_expiry(spark, tmp_path):
     import pyspark.sql.functions as F
     from pyspark.sql.streaming import StatefulProcessor
 
-    from aws_etl_bank_spark.streaming.tws import (ROCKSDB_PROVIDER,
-                                                  ensure_worker_protobuf)
-
-    ensure_worker_protobuf(spark)
+    from aws_etl_bank_spark.streaming.tws import rocksdb_state_store
 
     class SessionTimeout(StatefulProcessor):
         def init(self, handle):
@@ -1106,28 +1042,13 @@ def test_tws_event_time_timer_expiry(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(feed)
               .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
               .withWatermark("ts", "1 minute"))
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionTimeout(),
-        outputStructType="user_id bigint, kind string, n bigint",
-        outputMode="Update", timeMode="EventTime")
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
-        q = (out.writeStream.format("memory").queryName("evt_timer_t")
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-    rows = sorted((r["user_id"], r["kind"], r["n"])
-                  for r in spark.table("evt_timer_t").collect())
+    with rocksdb_state_store(spark):
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=SessionTimeout(),
+            outputStructType="user_id bigint, kind string, n bigint",
+            outputMode="Update", timeMode="EventTime")
+        sunk = runner.run_to_memory(out, "update")
+    rows = sorted((r["user_id"], r["kind"], r["n"]) for r in sunk.collect())
     assert rows == [(1, "data", 2), (1, "timeout", 2), (2, "data", 1)]
 
 
@@ -1145,10 +1066,7 @@ def test_tws_value_state_ttl_expires_between_batches(spark, tmp_path):
     from pyspark.sql.streaming import (StatefulProcessor,
                                        StatefulProcessorHandle)
 
-    from aws_etl_bank_spark.streaming.tws import (ROCKSDB_PROVIDER,
-                                                  ensure_worker_protobuf)
-
-    ensure_worker_protobuf(spark)
+    from aws_etl_bank_spark.streaming.tws import rocksdb_state_store
 
     class TtlCounts(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1178,17 +1096,12 @@ def test_tws_value_state_ttl_expires_between_batches(spark, tmp_path):
 
     stream = (spark.readStream.schema("user_id long")
               .option("maxFilesPerTrigger", 1).parquet(feed))
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TtlCounts(),
-        outputStructType="user_id bigint, n_ttl bigint, n_all bigint",
-        outputMode="Update",
-        timeMode="ProcessingTime")
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
-    try:
+    with rocksdb_state_store(spark):
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=TtlCounts(),
+            outputStructType="user_id bigint, n_ttl bigint, n_all bigint",
+            outputMode="Update",
+            timeMode="ProcessingTime")
         q = (out.writeStream.format("memory").queryName("tws_ttl")
              .outputMode("update").trigger(availableNow=True).start())
         # availableNow does NOT self-terminate here: with a 1 ms TTL in
@@ -1202,13 +1115,6 @@ def test_tws_value_state_ttl_expires_between_batches(spark, tmp_path):
                 break
             _time.sleep(0.5)
         q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
 
     rows = spark.table("tws_ttl").collect()
     assert len(rows) >= 4, rows
@@ -1224,3 +1130,84 @@ def test_tws_value_state_ttl_expires_between_batches(spark, tmp_path):
     # batch's count restarts at that batch's row count alone
     assert final[1]["n_ttl"] < 3 and final[2]["n_ttl"] < 2, dict(
         (k, (v["n_ttl"], v["n_all"])) for k, v in final.items())
+
+
+# ---------------------------------------------------------------------------
+# Run lifecycle: bounded runs leave no query, table or stale scratch behind
+# ---------------------------------------------------------------------------
+
+#: registry entries whose streaming query runs through run_to_memory
+_RUN_TO_MEMORY_ENTRIES = (
+    "stream_window_counts", "stream_stateful_counts",
+    "stream_tws_running_totals", "stream_tws_minmax_rows",
+    "stream_tws_topk_list", "stream_tws_type_counts_map",
+    "stream_stream_join", "stream_dedup_ids", "stream_static_enrich",
+    "stream_state_store_read", "stream_state_reader",
+)
+
+
+def test_streaming_entries_leave_no_query_view_or_threads(spark):
+    """Two back-to-back passes over every run_to_memory entry at sf0.01:
+    after each pass no query is active, no memory view is left, the
+    state-store provider is what it was, and the JVM thread count
+    after pass 2 stays within a small margin of pass 1.  The margin
+    covers the cached exchange pools (60 s keep-alive) and the one
+    Python worker factory each transformWithState query adds; Spark
+    4.1's checkpoint-checksum pools once leaked about 128 threads per
+    run, about 1,400 per pass here.  Each returned frame is read after
+    its view was dropped."""
+    import os
+
+    from aws_etl_bank_spark.plans.registry import load_registry
+    from tests.conftest import SF_SMOKE
+
+    sf_dir = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    provider_conf = "spark.sql.streaming.stateStore.providerClass"
+    registry = load_registry()
+    threads = (spark.sparkContext._jvm.java.lang.management
+               .ManagementFactory.getThreadMXBean())
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views_before = views()
+    provider_before = spark.conf.get(provider_conf, None)
+    counts = []
+    for _ in range(2):
+        for name in _RUN_TO_MEMORY_ENTRIES:
+            out = registry[name].fn(spark, sf_dir)
+            assert out.count() > 0, name
+        assert spark.streams.active == []
+        assert views() == views_before
+        assert spark.conf.get(provider_conf, None) == provider_before
+        counts.append(threads.getThreadCount())
+    assert counts[1] - counts[0] <= 64, counts
+
+
+def test_scratch_run_sweeps_only_aged_same_prefix_leaves(tmp_path,
+                                                         monkeypatch):
+    """``_scratch_run`` hands out a fresh leaf per call and removes
+    same-prefix run leaves older than 30 minutes; a fresh sibling, an
+    aged leaf of another prefix and an aged fixed-name leaf stay."""
+    import os
+    import time
+
+    from aws_etl_bank_spark.plans import registry
+
+    monkeypatch.setattr(registry, "SCRATCH", str(tmp_path))
+    root = tmp_path / "sf0.01"
+    root.mkdir()
+    aged_run, fresh_run = "ck_" + "a" * 32, "ck_" + "b" * 32
+    aged_stamp, other_prefix = "ck_1792390315497", "sink_" + "a" * 32
+    hour_ago = time.time() - 3600
+    for n in (aged_run, fresh_run, aged_stamp, other_prefix, "ck_feed"):
+        (root / n).mkdir()
+        if n != fresh_run:
+            os.utime(root / n, (hour_ago, hour_ago))
+
+    leaf = registry._scratch_run("/data/sf0.01", "ck")
+    assert os.path.dirname(leaf) == str(root)
+    assert os.path.basename(leaf).startswith("ck_")
+    assert registry._scratch_run("/data/sf0.01", "ck") != leaf
+    assert sorted(p.name for p in root.iterdir()) == [
+        fresh_run, "ck_feed", other_prefix]

@@ -131,6 +131,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Registry entries by name.  They expect the engine's runtime confs
+    on the session: ``entry(spark)`` or ``session.get_spark`` applies
+    them once, and no entry changes them."""
     return {name: spec.fn for name, spec in _registry().items()}
 
 

@@ -19,14 +19,16 @@ specification:
 GIF is lossless on palette indices, so closed-form planted fixtures
 hash-check the entire LZW protocol through the SQL oracle — a wrong
 code-size bump boundary or KwKwK branch scrambles pixels.
-Spark plumbing: same Arrow-batched map-only shape as the other
-decoders; corrupt payloads → NULL rows.
+Spark plumbing: ``llm.multimodal.map_payloads``, the same Arrow-batched
+map-only shape as the other decoders; a payload ``decode_gif`` rejects
+with ValueError → NULL row.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+
+from aws_etl_bank_spark.llm.multimodal import map_payloads
 
 
 class _LsbBitWriter:
@@ -262,55 +264,44 @@ def fixture_spec_gif(doc_id: int):
 
 
 def synthetic_gif_payloads(df, id_col: str = "doc_id"):
-    import pandas as pd
+    """id column -> (id, payload binary) of deterministic GIFs (see
+    ``fixture_spec_gif``) over the closed-form ``_fixture_palette``."""
+    import numpy as np
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
+    pal = _fixture_palette()
 
-        pal = _fixture_palette()
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                w, h = fixture_spec_gif(d)
-                i = np.arange(h * w, dtype=np.int64)
-                idx = ((31 * d + 7 * i) % 64).astype(np.uint8) \
-                    .reshape(h, w)
-                payloads.append(encode_gif(idx, pal))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def gif(d):
+        d = int(d)
+        w, h = fixture_spec_gif(d)
+        i = np.arange(h * w, dtype=np.int64)
+        idx = ((31 * d + 7 * i) % 64).astype(np.uint8).reshape(h, w)
+        return (encode_gif(idx, pal),)
 
-    return df.select(id_col).mapInPandas(
-        gen, f"{id_col} long, payload binary")
+    return map_payloads(df.select(id_col), id_col, id_col, gif,
+                        f"{id_col} long, payload binary")
+
+
+def _gif_features(blob):
+    """(width, height, mean_r, mean_g, mean_b) of one GIF payload; None
+    for a NULL payload or a corrupt one (``ValueError``)."""
+    import numpy as np
+
+    if blob is None:
+        return None
+    try:
+        h, w, rgb = decode_gif(bytes(blob))
+    except ValueError:
+        return None
+    s = rgb.astype(np.float64).sum(axis=(0, 1))
+    n = float(h * w)
+    return w, h, s[0] / n, s[1] / n, s[2] / n
 
 
 def decode_gif_features(df, payload_col: str = "payload",
                         id_col: str = "doc_id"):
-    import pandas as pd
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        for pdf in batches:
-            cols = {"width": [], "height": [], "mean_r": [], "mean_g": [],
-                    "mean_b": []}
-            for blob in pdf[payload_col]:
-                try:
-                    h, w, rgb = decode_gif(bytes(blob))
-                    s = rgb.astype(np.float64).sum(axis=(0, 1))
-                    n = float(h * w)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["mean_r"].append(s[0] / n)
-                    cols["mean_g"].append(s[1] / n)
-                    cols["mean_b"].append(s[2] / n)
-                except Exception:
-                    for k in cols:
-                        cols[k].append(None)
-            out = pd.DataFrame({id_col: pdf[id_col]})
-            for k, v in cols.items():
-                out[k] = v
-            yield out
-
-    return df.mapInPandas(
-        run, f"{id_col} long, width int, height int, "
-             "mean_r double, mean_g double, mean_b double")
+    """binary GIF column -> (id, width, height, mean_r, mean_g, mean_b)
+    via the real decoder and ``map_payloads``; NULL and corrupt
+    payloads yield NULL features."""
+    return map_payloads(df, id_col, payload_col, _gif_features,
+                        f"{id_col} long, width int, height int, "
+                        "mean_r double, mean_g double, mean_b double")

@@ -25,10 +25,11 @@ boundary — the decoded image is integer-exact and closed-form in the
 image id (see ``multimodal_decode_jpeg`` in plans/registry_llm_corpus.py).
 
 Scale shape: decoding is per-image CPU work with no cross-row
-dependency — ``decode_jpeg_features`` runs inside Arrow-batched
-``mapInPandas`` (map-only, no shuffle), the same plumbing as the PPM
-and WAV decoders; corrupt payloads yield NULL rows, never task
-failures.
+dependency — ``decode_jpeg_features`` runs through
+``llm.multimodal.map_payloads`` (one Arrow-batched ``mapInPandas``,
+map-only, no shuffle), the same plumbing as the PPM, PNG, GIF and WAV
+decoders; a payload the decoder rejects with ``ValueError`` yields a
+NULL row, never a task failure.
 
 Reference parity: the reference engine treats image columns as opaque
 binary + typed metadata (SURVEY.md §2 multimodal rows); this module is
@@ -38,7 +39,8 @@ the Spark-first realization with the decode made real.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+
+from aws_etl_bank_spark.llm.multimodal import map_payloads
 
 # ---------------------------------------------------------------------------
 # T.81 Annex K standard tables (public specification constants)
@@ -371,6 +373,8 @@ def _decode_baseline_impl(buf: bytes):
             comps = []
             for c in range(ncomp):
                 cid, samp, qid = seg[6 + 3 * c:9 + 3 * c]
+                if not (1 <= samp >> 4 <= 4 and 1 <= samp & 0x0F <= 4):
+                    raise ValueError("jpeg: sampling factor out of 1..4")
                 comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F,
                               "q": qid})
             frame = {"h": h, "w": w, "comps": comps}
@@ -406,6 +410,12 @@ def _decode_scan(buf, pos, frame, scan, qtables, htables, restart_interval):
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
     m = _dct_matrix()
+    # every block costs at least 2 bits (a DC and an EOB Huffman code),
+    # so a frame larger than its entropy data is corrupt; rejecting it
+    # here keeps a few flipped SOF bytes from allocating gigabytes
+    n_blocks = mcux * mcuy * sum(c["h"] * c["v"] for c, _, _ in scan)
+    if 2 * n_blocks > 8 * (len(buf) - pos):
+        raise ValueError("jpeg: frame larger than its entropy data")
 
     planes = {}
     for comp, _, _ in scan:
@@ -424,9 +434,11 @@ def _decode_scan(buf, pos, frame, scan, qtables, htables, restart_interval):
             for comp, dc_id, ac_id in scan:
                 dct = htables.get((0, dc_id))
                 act = htables.get((1, ac_id))
-                q = qtables[comp["q"]]
+                q = qtables.get(comp["q"])
                 if dct is None or act is None:
                     raise ValueError("jpeg: missing huffman table")
+                if q is None:
+                    raise ValueError("jpeg: missing quantization table")
                 for by in range(comp["v"]):
                     for bx in range(comp["h"]):
                         coeffs = _decode_block(br, dct, act, q, pred,
@@ -712,76 +724,58 @@ def synthetic_jpeg_payloads(df, id_col: str = "doc_id",
     block-constant baseline JPEGs (``fixture_spec`` for 4:4:4,
     ``fixture_spec_420`` for 4:2:0).  Generation runs Arrow-batched on
     the executors — the driver never sees a payload byte."""
-    import pandas as pd
+    import numpy as np
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
+    def jpeg(d):
+        d = int(d)
+        if subsampling == "4:2:0":
+            w, h, bx, ys, cb, cr = fixture_spec_420(d)
+            img = np.zeros((h, w, 3))
+            img[..., 1] = cb
+            img[..., 2] = cr
+            for b, vy in enumerate(ys):
+                r0, c0 = (b // bx) * 8, (b % bx) * 8
+                img[r0:r0 + 8, c0:c0 + 8, 0] = vy
+        else:
+            w, h, bx, blocks = fixture_spec(d)
+            img = np.zeros((h, w, 3))
+            for b, (vy, vcb, vcr) in enumerate(blocks):
+                r0, c0 = (b // bx) * 8, (b % bx) * 8
+                img[r0:r0 + 8, c0:c0 + 8] = (vy, vcb, vcr)
+        return (encode_baseline(ycbcr=img, quant_luma=FIXTURE_QUANT,
+                                quant_chroma=FIXTURE_QUANT,
+                                subsampling=subsampling),)
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                if subsampling == "4:2:0":
-                    w, h, bx, ys, cb, cr = fixture_spec_420(d)
-                    img = np.zeros((h, w, 3))
-                    img[..., 1] = cb
-                    img[..., 2] = cr
-                    for b, vy in enumerate(ys):
-                        r0, c0 = (b // bx) * 8, (b % bx) * 8
-                        img[r0:r0 + 8, c0:c0 + 8, 0] = vy
-                else:
-                    w, h, bx, blocks = fixture_spec(d)
-                    img = np.zeros((h, w, 3))
-                    for b, (vy, vcb, vcr) in enumerate(blocks):
-                        r0, c0 = (b // bx) * 8, (b % bx) * 8
-                        img[r0:r0 + 8, c0:c0 + 8] = (vy, vcb, vcr)
-                payloads.append(encode_baseline(
-                    ycbcr=img, quant_luma=FIXTURE_QUANT,
-                    quant_chroma=FIXTURE_QUANT, subsampling=subsampling))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    return map_payloads(df.select(id_col), id_col, id_col, jpeg,
+                        f"{id_col} long, payload binary")
 
-    return df.select(id_col).mapInPandas(
-        gen, f"{id_col} long, payload binary")
+
+def _jpeg_features(blob):
+    """(width, height, mean_r, mean_g, mean_b) of one JPEG payload;
+    None for a NULL payload or a corrupt one (``ValueError``)."""
+    import numpy as np
+
+    if blob is None:
+        return None
+    try:
+        h, w, rgb = decode_baseline(bytes(blob))
+    except ValueError:
+        return None
+    if rgb.ndim == 2:
+        rgb = np.stack([rgb] * 3, axis=-1)
+    sums = rgb.astype(np.float64).sum(axis=(0, 1))
+    n = float(h * w)
+    return w, h, sums[0] / n, sums[1] / n, sums[2] / n
 
 
 def decode_jpeg_features(df, payload_col: str = "payload",
                          id_col: str = "doc_id"):
     """binary JPEG column -> (id, width, height, mean_r, mean_g,
-    mean_b) via the real decoder, Arrow-batched mapInPandas (map-only,
-    no shuffle).  Sums are over exact uint8 integers so the double
-    means are order-independent; corrupt payloads yield NULL features.
+    mean_b) via the real decoder and ``map_payloads`` (map-only, no
+    shuffle).  Sums are over exact uint8 integers so the double means
+    are order-independent; NULL and corrupt payloads yield NULL
+    features.
     """
-    import pandas as pd
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        for pdf in batches:
-            rows = {"width": [], "height": [], "mean_r": [], "mean_g": [],
-                    "mean_b": []}
-            for blob in pdf[payload_col]:
-                try:
-                    h, w, rgb = decode_baseline(bytes(blob))
-                    if rgb.ndim == 2:
-                        rgb = np.stack([rgb] * 3, axis=-1)
-                    sums = rgb.astype(np.float64).sum(axis=(0, 1))
-                    n = float(h * w)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(sums[0] / n)
-                    rows["mean_g"].append(sums[1] / n)
-                    rows["mean_b"].append(sums[2] / n)
-                except Exception:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["mean_r"].append(None)
-                    rows["mean_g"].append(None)
-                    rows["mean_b"].append(None)
-            out = pd.DataFrame({id_col: pdf[id_col]})
-            for k, v in rows.items():
-                out[k] = v
-            yield out
-
-    return df.mapInPandas(
-        run, f"{id_col} long, width int, height int, "
-             "mean_r double, mean_g double, mean_b double")
+    return map_payloads(df, id_col, payload_col, _jpeg_features,
+                        f"{id_col} long, width int, height int, "
+                        "mean_r double, mean_g double, mean_b double")

@@ -1,15 +1,16 @@
 """Multimodal column support: image/audio/video payloads as opaque
 ``binary`` columns with typed metadata structs.
 
-The Spark-side plumbing — schema convention, Arrow batch shape,
-``mapInPandas`` signatures, partitioning — is real and tested.  Decoding:
-UNCOMPRESSED formats (PPM P6, 24-bit BMP) are decoded FOR REAL with
-numpy alone (``decode_image_features(..., fake=False)``) — header parse,
-exact pixel bytes, grayscale thumbnail vectors; compressed formats
-(JPEG/PNG/video codecs) need libraries not in this container and come
-back as NULL features, the documented integration point.  ``fake=True``
-keeps the deterministic byte-derived stub for exercising the pipeline
-shape over non-image payloads.
+Every codec here runs through one per-row payload map,
+``map_payloads``: one Arrow-batched ``mapInPandas`` that turns each
+``(key, payload)`` row into ``(key, *features)``, or a NULL-feature row
+when the payload does not decode.  Decoding is real: PPM (P6), 24-bit
+BMP and PCM WAV are parsed here with numpy alone; JPEG, PNG and GIF
+have from-scratch codecs in ``llm/jpeg.py``, ``llm/png.py`` and
+``llm/gif.py``.  Other formats (video codecs, ...) come back as NULL
+features.  ``decode_image_features(..., fake=True)`` keeps the
+deterministic byte-derived stub for exercising the pipeline shape over
+non-image payloads.
 
 Schema convention::
 
@@ -43,7 +44,32 @@ def attach_binary_payload(df: DataFrame, source_col: str = "text",
     )
 
 
-_FEATURE_SCHEMA = "doc_id long, n_bytes long, width int, height int, mean_byte double"
+def map_payloads(df: DataFrame, key_col: str, value_col: str, fn,
+                 schema: str) -> DataFrame:
+    """The per-row payload map every codec in this package shares: one
+    Arrow-batched ``mapInPandas`` (map-only, no shuffle) that emits
+    ``(key, *fn(value))`` for each row of ``df``, or ``(key, NULL, …)``
+    when ``fn`` returns None — one undecodable payload is one
+    NULL-feature row, never a stage failure.  Any exception ``fn``
+    raises fails the task: each ``fn`` catches exactly its codec's
+    documented corrupt-payload error, so a bug in the feature arithmetic
+    is not hidden as NULL.  ``schema`` is a DDL string: the key column
+    first, then ``fn``'s fields in order.  A NaN feature becomes NULL at
+    the pandas → Arrow boundary."""
+    names = T.StructType.fromDDL(schema).names
+    nulls = (None,) * (len(names) - 1)
+
+    def run(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for key, value in zip(batch[key_col], batch[value_col]):
+                feats = fn(value)
+                rows.append((key, *(nulls if feats is None else feats)))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
 
 
 def _decode_ppm(buf: bytes):
@@ -121,72 +147,59 @@ def _decode_any(buf) -> tuple | None:
     return out
 
 
+def _image_features(payload):
+    """(n_bytes, width, height, mean_byte) of one image payload; a NULL
+    payload (missing/corrupt upstream fetch) is ``n_bytes`` 0 and
+    undecodable bytes keep their length, both with NULL features."""
+    if payload is None:
+        return 0, None, None, None
+    dec = _decode_any(payload)
+    if dec is None:
+        return len(payload), None, None, None
+    w, h, px = dec
+    return len(payload), w, h, round(float(px.mean()), 4)
+
+
 def decode_image_features(df: DataFrame, payload_col: str = "payload",
                           id_col: str = "doc_id", fake: bool = False) -> DataFrame:
     """Decode image payloads to (width, height, mean_byte) features via
-    Arrow-batched ``mapInPandas``.
+    ``map_payloads``.
 
-    REAL for uncompressed formats: PPM (P6) and 24-bit BMP payloads are
-    parsed with numpy alone — dimensions from the header, ``mean_byte``
-    over the exact pixel bytes.  Payloads in formats needing an external
-    codec (JPEG/PNG/...) return NULL width/height/mean_byte (``n_bytes``
+    PPM (P6) and 24-bit BMP payloads are parsed with numpy alone —
+    dimensions from the header, ``mean_byte`` over the exact pixel
+    bytes.  JPEG, PNG and GIF have their own feature functions
+    (``llm/jpeg.py``, ``llm/png.py``, ``llm/gif.py``, same helper); any
+    other payload returns NULL width/height/mean_byte (``n_bytes``
     always populated) — the per-row policy a 100 TB media crawl needs,
     where one corrupt file must not kill the stage.  ``fake=True``
     bypasses decoding and derives deterministic pseudo-features from the
-    raw bytes (the pipeline-shape stub used by the text-payload
-    entries)."""
-
-    def run_real(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                # NULL payload (missing/corrupt upstream fetch) must not
-                # kill the stage on a 100 TB crawl: emit a NULL-feature
-                # row and move on (r7 advice).
-                if payload is None:
-                    feats.append((0, None, None, None))
-                    continue
-                n = len(payload)
-                dec = _decode_any(payload)
-                if dec is None:
-                    feats.append((n, None, None, None))
-                else:
-                    w, h, px = dec
-                    feats.append((n, w, h, round(float(px.mean()), 4)))
-            out = pd.DataFrame(feats,
-                               columns=["n_bytes", "width", "height",
-                                        "mean_byte"])
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
+    raw bytes, vectorised per batch (the pipeline-shape stub used by the
+    text-payload entries)."""
+    schema = (f"{id_col} long, n_bytes long, width int, height int, "
+              "mean_byte double")
     if not fake:
-        return df.mapInPandas(run_real, schema=_FEATURE_SCHEMA)
+        return map_payloads(df, id_col, payload_col, _image_features, schema)
 
-    def run(batches):
+    def fake_features(pdf):
         import pandas as pd
 
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            n_bytes = payloads.map(lambda b: 0 if b is None else len(b))
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": n_bytes,
-                    "width": (n_bytes % 256).astype("int32"),
-                    "height": ((n_bytes * 7) % 256).astype("int32"),
-                    "mean_byte": payloads.map(
-                        lambda b: None if b is None else
-                        round(sum(b[:64]) / max(min(len(b), 64), 1), 4)
-                    ),
-                }
-            )
-            yield out
+        payloads = pdf[payload_col]
+        n_bytes = payloads.map(lambda b: 0 if b is None else len(b))
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col],
+                "n_bytes": n_bytes,
+                "width": (n_bytes % 256).astype("int32"),
+                "height": ((n_bytes * 7) % 256).astype("int32"),
+                "mean_byte": payloads.map(
+                    lambda b: None if b is None else
+                    round(sum(b[:64]) / max(min(len(b), 64), 1), 4)
+                ),
+            }
+        )
 
-    return df.mapInPandas(run, schema=_FEATURE_SCHEMA)
+    return df.mapInPandas(lambda batches: map(fake_features, batches),
+                          schema=schema)
 
 
 def sample_frames(df: DataFrame, n_frames: int = 4, payload_col: str = "payload",
@@ -215,24 +228,18 @@ def synthetic_ppm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     image is ``(4 + d % 13) × (3 + d % 7)`` with pixel byte ``i`` equal
     to ``(d·31 + i·7) mod 256``, so the decoded width/height/mean are
     closed-form SQL expressions an oracle can compute without ever
-    seeing the bytes.  Arrow-batched mapInPandas, one payload per row."""
+    seeing the bytes.  One payload per row via ``map_payloads``."""
     import numpy as np
 
-    def gen(batches):
-        import pandas as pd
+    def ppm(d):
+        d = int(d)
+        w, h = 4 + d % 13, 3 + d % 7
+        px = ((d * 31 + np.arange(w * h * 3, dtype=np.int64) * 7)
+              % 256).astype(np.uint8)
+        return (b"P6\n%d %d\n255\n" % (w, h) + px.tobytes(),)
 
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 4 + d % 13, 3 + d % 7
-                px = ((d * 31 + np.arange(w * h * 3, dtype=np.int64) * 7)
-                      % 256).astype(np.uint8)
-                payloads.append(b"P6\n%d %d\n255\n" % (w, h) + px.tobytes())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(id_col).mapInPandas(gen, schema="doc_id long, payload binary")
+    return map_payloads(df.select(id_col), id_col, id_col, ppm,
+                        f"{id_col} long, payload binary")
 
 
 def image_grayscale_vector(df: DataFrame, out_w: int = 8, out_h: int = 8,
@@ -244,31 +251,23 @@ def image_grayscale_vector(df: DataFrame, out_w: int = 8, out_h: int = 8,
     8×8 thumbnail vector is the classic perceptual pre-filter).  Pure
     numpy indexing — nearest-neighbor is integer gather, no codec, no
     interpolation library; undecodable payloads yield a NULL vector.
-    Same 100 TB shape as every embedding op here: Arrow-batched
-    mapInPandas, map-only, no shuffle."""
+    Same 100 TB shape as every embedding op here: ``map_payloads``,
+    map-only, no shuffle."""
     import numpy as np
 
-    def run(batches):
-        import pandas as pd
+    def thumbnail(payload):
+        dec = _decode_any(payload)
+        if dec is None:
+            return None
+        w, h, px = dec
+        img = px.reshape(h, w, 3).astype(np.float64)
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        thumb = img[ys][:, xs].mean(axis=2) / 255.0
+        return (thumb.reshape(-1).astype(np.float32),)
 
-        for pdf in batches:
-            vecs = []
-            for payload in pdf[payload_col]:
-                dec = _decode_any(payload)
-                if dec is None:
-                    vecs.append(None)
-                    continue
-                w, h, px = dec
-                img = px.reshape(h, w, 3).astype(np.float64)
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                thumb = img[ys][:, xs].mean(axis=2) / 255.0
-                vecs.append(thumb.reshape(-1).astype(np.float32))
-            out = pd.DataFrame({"doc_id": pdf[id_col].to_numpy(),
-                                "vector": pd.Series(vecs, dtype=object)})
-            yield out
-
-    return df.mapInPandas(run, schema="doc_id long, vector array<float>")
+    return map_payloads(df, id_col, payload_col, thumbnail,
+                        f"{id_col} long, vector array<float>")
 
 
 def _decode_wav(buf):
@@ -307,6 +306,16 @@ def _decode_wav(buf):
     return rate, channels, samples
 
 
+def _mono_pcm16_wav(samples, rate: int) -> bytes:
+    """A mono 16-bit PCM RIFF/WAVE file around ``<i2`` ``samples``."""
+    import struct
+
+    data = samples.tobytes()
+    return struct.pack("<4sI4s4sIHHIIHH4sI", b"RIFF", 36 + len(data),
+                       b"WAVE", b"fmt ", 16, 1, 1, rate, 2 * rate, 2, 16,
+                       b"data", len(data)) + data
+
+
 def synthetic_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic 16-bit PCM WAV payloads from the row id — the
     planted-audio fixture for the REAL decode path: doc ``d`` carries
@@ -316,31 +325,15 @@ def synthetic_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     SQL expression over the same arithmetic."""
     import numpy as np
 
-    def gen(batches):
-        import pandas as pd
+    def wav(d):
+        d = int(d)
+        ns = 64 + d % 97
+        x = (((d * 17 + np.arange(ns, dtype=np.int64) * 13) % 4096)
+             - 2048).astype("<i2")
+        return (_mono_pcm16_wav(x, 8000),)
 
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                ns = 64 + d % 97
-                x = (((d * 17 + np.arange(ns, dtype=np.int64) * 13) % 4096)
-                     - 2048).astype("<i2")
-                data = x.tobytes()
-                hdr = (b"RIFF" + (36 + len(data)).to_bytes(4, "little")
-                       + b"WAVEfmt " + (16).to_bytes(4, "little")
-                       + (1).to_bytes(2, "little")      # PCM
-                       + (1).to_bytes(2, "little")      # mono
-                       + (8000).to_bytes(4, "little")   # rate
-                       + (16000).to_bytes(4, "little")  # byte rate
-                       + (2).to_bytes(2, "little")      # block align
-                       + (16).to_bytes(2, "little")     # bits
-                       + b"data" + len(data).to_bytes(4, "little"))
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(id_col).mapInPandas(gen, schema="doc_id long, payload binary")
+    return map_payloads(df.select(id_col), id_col, id_col, wav,
+                        f"{id_col} long, payload binary")
 
 
 def decode_audio_features(df: DataFrame, payload_col: str = "payload",
@@ -356,38 +349,25 @@ def decode_audio_features(df: DataFrame, payload_col: str = "payload",
     sqrt — all correctly-rounded ops, no libm)."""
     import numpy as np
 
-    schema = ("doc_id long, sample_rate int, n_channels int, "
-              "n_samples long, mean_amp double, rms double, "
-              "peak int, zero_cross long")
+    def audio(payload):
+        dec = _decode_wav(payload)
+        if dec is None:
+            return None
+        rate, ch, x = dec
+        n = x.size
+        if n == 0:
+            return rate, ch, 0, None, None, None, 0
+        xs = x.astype(np.int64)
+        mean = float(xs.sum()) / n
+        rms = float(np.sqrt(float((xs * xs).sum()) / n))
+        peak = int(np.abs(xs).max())
+        zc = int(((xs[1:] * xs[:-1]) < 0).sum())
+        return int(rate), int(ch), int(n), mean, rms, peak, zc
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for d, payload in zip(pdf[id_col].to_numpy(), pdf[payload_col]):
-                dec = _decode_wav(payload)
-                if dec is None:
-                    rows.append((int(d), None, None, None, None, None,
-                                 None, None))
-                    continue
-                rate, ch, x = dec
-                n = x.size
-                if n == 0:
-                    rows.append((int(d), rate, ch, 0, None, None, None, 0))
-                    continue
-                xs = x.astype(np.int64)
-                mean = float(xs.sum()) / n
-                rms = float(np.sqrt(float((xs * xs).sum()) / n))
-                peak = int(np.abs(xs).max())
-                zc = int(((xs[1:] * xs[:-1]) < 0).sum())
-                rows.append((int(d), int(rate), int(ch), int(n),
-                             mean, rms, peak, zc))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_rate", "n_channels", "n_samples",
-                "mean_amp", "rms", "peak", "zero_cross"])
-
-    return df.mapInPandas(run, schema=schema)
+    return map_payloads(df, id_col, payload_col, audio,
+                        f"{id_col} long, sample_rate int, n_channels int, "
+                        "n_samples long, mean_amp double, rms double, "
+                        "peak int, zero_cross long")
 
 
 def synthetic_tone_wavs(df: DataFrame, id_col: str = "doc_id",
@@ -399,30 +379,15 @@ def synthetic_tone_wavs(df: DataFrame, id_col: str = "doc_id",
     the id."""
     import numpy as np
 
-    def gen(batches):
-        import pandas as pd
+    def tone(d):
+        k = 3 + int(d) % 60
+        t = np.arange(n_samples, dtype=np.float64)
+        x = np.round(12000.0 * np.sin(2.0 * np.pi * k * t
+                                      / n_samples)).astype("<i2")
+        return (_mono_pcm16_wav(x, rate),)
 
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for d in ids:
-                d = int(d)
-                k = 3 + d % 60
-                t = np.arange(n_samples, dtype=np.float64)
-                x = np.round(12000.0 * np.sin(2.0 * np.pi * k * t
-                                              / n_samples)).astype("<i2")
-                data = x.tobytes()
-                hdr = (b"RIFF" + (36 + len(data)).to_bytes(4, "little")
-                       + b"WAVEfmt " + (16).to_bytes(4, "little")
-                       + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-                       + rate.to_bytes(4, "little")
-                       + (rate * 2).to_bytes(4, "little")
-                       + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-                       + b"data" + len(data).to_bytes(4, "little"))
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(id_col).mapInPandas(gen, schema="doc_id long, payload binary")
+    return map_payloads(df.select(id_col), id_col, id_col, tone,
+                        f"{id_col} long, payload binary")
 
 
 def audio_spectral_features(df: DataFrame, payload_col: str = "payload",
@@ -441,27 +406,17 @@ def audio_spectral_features(df: DataFrame, payload_col: str = "payload",
     unambiguous anyway."""
     import numpy as np
 
-    schema = ("doc_id long, peak_bin int, peak_hz double, "
-              "peak_ratio double, n_fft int")
+    def spectrum(payload):
+        dec = _decode_wav(payload)
+        if dec is None or dec[2].size < n_fft:
+            return None
+        rate, _ch, x = dec
+        spec = np.abs(np.fft.rfft(x[:n_fft].astype(np.float64)))
+        k = int(np.argmax(spec[1:]) + 1)  # skip DC
+        tot = float(spec.sum())
+        return (k, k * rate / n_fft,
+                float(spec[k]) / tot if tot > 0 else None, n_fft)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for d, payload in zip(pdf[id_col].to_numpy(), pdf[payload_col]):
-                dec = _decode_wav(payload)
-                if dec is None or dec[2].size < n_fft:
-                    rows.append((int(d), None, None, None, None))
-                    continue
-                rate, _ch, x = dec
-                spec = np.abs(np.fft.rfft(x[:n_fft].astype(np.float64)))
-                k = int(np.argmax(spec[1:]) + 1)  # skip DC
-                tot = float(spec.sum())
-                rows.append((int(d), k, k * rate / n_fft,
-                             float(spec[k]) / tot if tot > 0 else None,
-                             n_fft))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "peak_bin", "peak_hz", "peak_ratio", "n_fft"])
-
-    return df.mapInPandas(run, schema=schema)
+    return map_payloads(df, id_col, payload_col, spectrum,
+                        f"{id_col} long, peak_bin int, peak_hz double, "
+                        "peak_ratio double, n_fft int")

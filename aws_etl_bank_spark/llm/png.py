@@ -22,15 +22,17 @@ which is what lets the SQL oracle hash-check the whole unfilter
 matrix: fixture rows cycle filters 0-4, and any Paeth/Average defect
 shifts the recovered pixels.
 
-Scale shape: identical to the other decoders — per-image CPU work,
-Arrow-batched ``mapInPandas``, map-only, corrupt payloads → NULL.
+Scale shape: identical to the other decoders — per-image CPU work
+through ``llm.multimodal.map_payloads`` (Arrow-batched ``mapInPandas``,
+map-only); a payload ``decode_png`` rejects with ValueError → NULL.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
+
+from aws_etl_bank_spark.llm.multimodal import map_payloads
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -107,7 +109,19 @@ def decode_png(buf: bytes):
     """PNG bytes → (height, width, uint8 ndarray [h, w, ch]).  Raises
     ValueError on bad signature/CRC/structure or unsupported variants
     (only 8-bit depth, color types 0/2/4/6, no interlace — the
-    baseline still images a data pipeline stores)."""
+    baseline still images a data pipeline stores).  A truncated chunk
+    header surfaces internally as ``struct.error`` and a corrupt IDAT
+    stream (whose CRC still matches) as ``zlib.error``; both are
+    re-raised here as ValueError, the contract the GIF and JPEG
+    decoders share."""
+    try:
+        return _decode_png_impl(buf)
+    except (struct.error, zlib.error) as exc:
+        raise ValueError(
+            f"png: malformed stream ({type(exc).__name__})") from exc
+
+
+def _decode_png_impl(buf: bytes):
     import numpy as np
 
     if buf[:8] != _SIG:
@@ -134,6 +148,8 @@ def decode_png(buf: bytes):
     if ihdr is None or not seen_end:
         raise ValueError("png: missing IHDR/IEND")
     w, h, depth, color, comp, filt, interlace = ihdr
+    if w == 0 or h == 0:
+        raise ValueError("png: zero width or height")
     if depth != 8 or comp != 0 or filt != 0 or interlace != 0:
         raise ValueError("png: only 8-bit non-interlaced supported")
     if color not in _COLOR_CHANNELS:
@@ -189,57 +205,39 @@ def fixture_spec_png(doc_id: int):
 def synthetic_png_payloads(df, id_col: str = "doc_id"):
     """id column -> (id, payload binary) of deterministic filtered
     PNGs (see ``fixture_spec_png``)."""
-    import pandas as pd
+    import numpy as np
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
+    def png(d):
+        d = int(d)
+        w, h = fixture_spec_png(d)
+        i = np.arange(h * w * 3, dtype=np.int64)
+        img = ((31 * d + 7 * i) % 256).astype(np.uint8).reshape(h, w, 3)
+        return (encode_png(img, filters=[y % 5 for y in range(h)]),)
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                w, h = fixture_spec_png(d)
-                i = np.arange(h * w * 3, dtype=np.int64)
-                img = ((31 * d + 7 * i) % 256).astype(np.uint8) \
-                    .reshape(h, w, 3)
-                payloads.append(encode_png(
-                    img, filters=[y % 5 for y in range(h)]))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    return map_payloads(df.select(id_col), id_col, id_col, png,
+                        f"{id_col} long, payload binary")
 
-    return df.select(id_col).mapInPandas(
-        gen, f"{id_col} long, payload binary")
+
+def _png_features(blob):
+    """(width, height, n_channels, mean_byte) of one PNG payload; None
+    for a NULL payload or a corrupt one (``ValueError``)."""
+    import numpy as np
+
+    if blob is None:
+        return None
+    try:
+        h, w, px = decode_png(bytes(blob))
+    except ValueError:
+        return None
+    return (w, h, px.shape[2],
+            float(px.astype(np.float64).sum()) / float(px.size))
 
 
 def decode_png_features(df, payload_col: str = "payload",
                         id_col: str = "doc_id"):
     """binary PNG column -> (id, width, height, n_channels, mean_byte)
-    via the real decoder, Arrow-batched mapInPandas; corrupt payloads
-    yield NULL features (house policy)."""
-    import pandas as pd
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        for pdf in batches:
-            cols = {"width": [], "height": [], "n_channels": [],
-                    "mean_byte": []}
-            for blob in pdf[payload_col]:
-                try:
-                    h, w, px = decode_png(bytes(blob))
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["n_channels"].append(px.shape[2])
-                    cols["mean_byte"].append(
-                        float(px.astype(np.float64).sum())
-                        / float(px.size))
-                except Exception:
-                    for k in cols:
-                        cols[k].append(None)
-            out = pd.DataFrame({id_col: pdf[id_col]})
-            for k, v in cols.items():
-                out[k] = v
-            yield out
-
-    return df.mapInPandas(
-        run, f"{id_col} long, width int, height int, n_channels int, "
-             "mean_byte double")
+    via the real decoder and ``map_payloads``; NULL and corrupt
+    payloads yield NULL features (house policy)."""
+    return map_payloads(df, id_col, payload_col, _png_features,
+                        f"{id_col} long, width int, height int, "
+                        "n_channels int, mean_byte double")

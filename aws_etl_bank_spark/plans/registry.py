@@ -28,8 +28,6 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from aws_etl_bank_spark.session import apply_runtime_confs
-
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
@@ -46,10 +44,6 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def q(name: str, oracle: str | None = None):
     def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_runtime_confs(spark)
-            return fn(spark, sf_dir)
-
         # a name collision silently SHADOWS the earlier entry (dict
         # write wins) and its driver evidence — caught live in r13
         # when a draft re-used ops_observe_metrics; make it loud
@@ -58,8 +52,8 @@ def q(name: str, oracle: str | None = None):
                 f"duplicate registry entry {name!r}: a second @q would "
                 "silently shadow the first (and its driver evidence); "
                 "pick a new name or delete the old entry explicitly")
-        REGISTRY[name] = QuerySpec(wrapped, oracle, fn.__module__)
-        return wrapped
+        REGISTRY[name] = QuerySpec(fn, oracle, fn.__module__)
+        return fn
 
     return deco
 

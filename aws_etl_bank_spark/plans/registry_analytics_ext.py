@@ -13,7 +13,6 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     SCRATCH, canon0, q, _scratch, _scratch_run)

@@ -14,7 +14,6 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     SCRATCH, canon0, q, _scratch)
@@ -528,10 +527,10 @@ def scale_bucket_pruned_read(spark, sf_dir):
     prune is forfeited.  The conf is pinned off SESSION-WIDE in
     ``session.RUNTIME_CONFS`` (r15, ADVICE r14: this entry used to
     flip it mid-session and never restore, making other entries'
-    physical plans execution-order-dependent); the ``@q`` wrapper
-    applies RUNTIME_CONFS on every entry invocation, so
-    externally-built sessions get the pin too — no per-entry conf
-    code needed."""
+    physical plans execution-order-dependent).  ``get_spark`` and the
+    driver's ``entry`` apply RUNTIME_CONFS once per session and no
+    entry changes them, which ``scripts/verify_entry.py`` checks after
+    its full pass — no per-entry conf code needed."""
     from aws_etl_bank_spark.functions.scale import (
         read_bucketed, reset_and_write_bucketed, sf_table_tag)
 

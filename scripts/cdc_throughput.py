@@ -25,7 +25,7 @@ Output: one JSON line — paste the summary into PERF.md and commit as
 bench_out/cdc_tp_<tag>_r<N>.json.
 
 Usage: python scripts/cdc_throughput.py [sf_dir] [copies] [batches]
-  sf_dir   source events table (default /root/repo/.scratch/sf1)
+  sf_dir   source events table (default <repo>/.scratch/sf1)
   copies   change-feed multiplier over sf_dir's events (default 10)
   batches  feed files / micro-batches (default 10)
 """
@@ -37,7 +37,7 @@ import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BEGIN = "<!-- LEDGER:BEGIN (scripts/gen_coverage.py) -->"
 END = "<!-- LEDGER:END -->"
@@ -25,7 +27,7 @@ def build_ledger() -> str:
 
     last: dict[str, tuple[int, str]] = {}
     rounds = []
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         rounds.append(rnd)
         for name, row in json.load(open(path)).items():
@@ -68,7 +70,7 @@ def build_ledger() -> str:
 
 
 def main() -> None:
-    path = "/root/repo/COVERAGE.md"
+    path = os.path.join(REPO, "COVERAGE.md")
     text = open(path).read()
     ledger = build_ledger()
     if BEGIN in text:

@@ -19,7 +19,7 @@ Output: one JSON line — paste the summary into PERF.md and commit as
 bench_out/incdedup_tp_<tag>_r<N>.json.
 
 Usage: python scripts/incdedup_throughput.py [sf_dir] [copies] [batches]
-  sf_dir   source documents table (default /root/repo/.scratch/sf1)
+  sf_dir   source documents table (default <repo>/.scratch/sf1)
   copies   corpus multiplier over sf_dir's documents (default 10 — a
            decade up from the source, e.g. sf1 -> 500k docs)
   batches  feed files / micro-batches (default 10)
@@ -32,7 +32,7 @@ import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

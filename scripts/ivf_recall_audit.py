@@ -17,11 +17,12 @@ below stand-in at any nprobe.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_etl_bank_spark.session import get_spark  # noqa: E402
 from aws_etl_bank_spark.llm.similarity import (  # noqa: E402

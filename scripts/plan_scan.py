@@ -22,7 +22,7 @@ import sys
 import time
 import traceback
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 PATTERNS = {

@@ -19,12 +19,13 @@ Usage: python scripts/verify_entry.py [sf_dir] [name_filter ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import datetime as dt
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -153,7 +154,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2:]
 
-    from aws_etl_bank_spark.session import get_spark
+    from aws_etl_bank_spark.session import RUNTIME_CONFS, get_spark
 
     spark = get_spark("verify_entry")
     con = duckdb.connect()
@@ -165,8 +166,8 @@ def main():
     failures, passed, rows_only = [], 0, 0
     record: dict[str, dict] = {}
     exclude = [e for e in
-               __import__("os").environ.get("SPARK_GRAFT_VERIFY_EXCLUDE",
-                                            "").split(",") if e]
+               os.environ.get("SPARK_GRAFT_VERIFY_EXCLUDE", "").split(",")
+               if e]
     for name, fn in qs.items():
         if name_filter and not any(f in name for f in name_filter):
             continue
@@ -270,6 +271,16 @@ def main():
         record[name] = {"status": "ok", "rows": len(rows)}
         print(f"ok    {name}: {len(rows)} rows")
 
+    # The session's runtime confs are applied once, where it is built;
+    # no entry may leave one changed for the entries after it.
+    drifted = {k: spark.conf.get(k) for k, v in RUNTIME_CONFS.items()
+               if spark.conf.get(k) != v}
+    if drifted:
+        failures.append(("runtime_confs", f"changed by the pass: {drifted}"))
+        print(f"FAIL  runtime confs changed by the pass: {drifted}")
+    else:
+        print(f"ok    runtime confs: all {len(RUNTIME_CONFS)} unchanged")
+
     total = len([n for n in qs if not name_filter or any(f in n for f in name_filter)])
     n_excluded = sum(1 for v in record.values() if v.get("status") == "excluded")
     print(f"\n{passed} passed, {rows_only} rows-only, {len(failures)} failed, "
@@ -282,20 +293,19 @@ def main():
     # SPARK_GRAFT_VERIFY_EXCLUDE skipped anything (r7 advice).
     if not name_filter:
         import json as _json
-        import os as _os
-        out_dir = _os.path.join(REPO, "bench_out")
-        _os.makedirs(out_dir, exist_ok=True)
+        out_dir = os.path.join(REPO, "bench_out")
+        os.makedirs(out_dir, exist_ok=True)
         payload = {"sf_dir": sf_dir, "total": total, "passed": passed,
                    "rows_only": rows_only, "failed": len(failures),
-                   "entries": record}
+                   "runtime_confs_drift": drifted, "entries": record}
         if n_excluded:
             payload["excluded"] = n_excluded
         # SPARK_GRAFT_VERIFY_OUT names the artifact (default
         # VERIFY_full.json) so an sf1 audit and the sf0.01 full gate
         # can run concurrently without clobbering each other's record
-        out_name = _os.environ.get("SPARK_GRAFT_VERIFY_OUT",
-                                   "VERIFY_full.json")
-        with open(_os.path.join(out_dir, out_name), "w") as f:
+        out_name = os.environ.get("SPARK_GRAFT_VERIFY_OUT",
+                                  "VERIFY_full.json")
+        with open(os.path.join(out_dir, out_name), "w") as f:
             _json.dump(payload, f, indent=1)
     sys.exit(1 if failures else 0)
 

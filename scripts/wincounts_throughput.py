@@ -20,12 +20,13 @@ import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        REPO, ".scratch", "sf1")
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
     import pyspark.sql.functions as F

@@ -119,6 +119,12 @@ def test_corrupt_and_unsupported_rejected():
     prog[sof + 1] = 0xC2
     with pytest.raises(ValueError, match="non-baseline"):
         decode_baseline(bytes(prog))
+    # a SOF claiming 60000x60000 over 8x8 worth of entropy data is
+    # rejected before the decoder allocates its planes (~27 GB each)
+    huge = bytearray(good)
+    huge[sof + 5:sof + 9] = (60000).to_bytes(2, "big") * 2
+    with pytest.raises(ValueError, match="larger than its entropy data"):
+        decode_baseline(bytes(huge))
 
 
 def test_spark_decode_features_and_null_policy(spark):
@@ -200,9 +206,9 @@ def test_16bit_dqt_segment_decodes():
 
 def test_png_codec_all_filters_and_rejects():
     """From-scratch PNG (llm/png.py): every scanline filter roundtrips
-    exactly for grey/RGB/RGBA, CRC corruption and truncation reject,
-    and the Spark feature path NULLs corrupt payloads."""
-    from aws_etl_bank_spark.llm.png import decode_png, encode_png
+    exactly for grey/RGB/RGBA; CRC corruption, truncation, a corrupt
+    deflate stream and a zero-width image all reject with ValueError."""
+    from aws_etl_bank_spark.llm.png import _chunk, decode_png, encode_png
 
     rng = np.random.RandomState(7)
     for shape in [(5, 9, 3), (8, 4, 1), (6, 6, 4)]:
@@ -216,8 +222,16 @@ def test_png_codec_all_filters_and_rejects():
     good = encode_png(np.zeros((3, 3, 3), np.uint8))
     bad_crc = bytearray(good)
     bad_crc[-5] ^= 0xFF             # flip inside IEND CRC
-    for bad in (b"", b"\x89PNG\r\n\x1a\nxxxx", good[:-6], bytes(bad_crc)):
-        with pytest.raises(Exception):
+    # a corrupt IDAT whose CRC matches: passes the CRC gate, fails inflate
+    ihdr_end = 8 + 25
+    idat_len = int.from_bytes(good[ihdr_end:ihdr_end + 4], "big")
+    bad_idat = (good[:ihdr_end] + _chunk(b"IDAT", b"\x78\x9c\xff\xff")
+                + good[ihdr_end + 12 + idat_len:])
+    zero_width = encode_png(np.zeros((2, 0, 3), np.uint8))
+    # good[:31] and good[:-2] cut a chunk's CRC short (IHDR, IEND)
+    for bad in (b"", b"\x89PNG\r\n\x1a\nxxxx", good[:-6], good[:31],
+                good[:-2], bytes(bad_crc), bad_idat, zero_width):
+        with pytest.raises(ValueError):
             decode_png(bad)
 
 

@@ -66,12 +66,18 @@ def test_bucketed_join_has_no_shuffle(spark, scratch):
         .withColumn("vb", F.col("id") + 2)
     scale.write_bucketed(a.select("k", "va"), "bkt_a", "k", n_buckets=8)
     scale.write_bucketed(b.select("k", "vb"), "bkt_b", "k", n_buckets=8)
-    # bucketed scans only report bucketing when AQE doesn't coalesce them
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-    joined = scale.read_bucketed(spark, "bkt_a").join(
-        scale.read_bucketed(spark, "bkt_b"), "k")
-    plan = _plan(joined)
-    assert joined.count() > 0
+    # bucketed scans only report bucketing when AQE doesn't coalesce them;
+    # restore the session-wide pin (session.OPTIONAL_CONFS) afterwards
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        joined = scale.read_bucketed(spark, "bkt_a").join(
+            scale.read_bucketed(spark, "bkt_b"), "k")
+        plan = _plan(joined)
+        assert joined.count() > 0
+    finally:
+        spark.conf.set(key, old)
     # the join itself needs no Exchange: both sides pre-partitioned on k
     assert "Exchange hashpartitioning(k" not in plan
     spark.sql("DROP TABLE IF EXISTS bkt_a")

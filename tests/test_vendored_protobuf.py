@@ -6,11 +6,14 @@ format itself from the public spec's documented examples."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/aws_etl_bank_spark/vendor")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "aws_etl_bank_spark", "vendor"))
 
 from google.protobuf.internal import wire_codec as w  # noqa: E402
 

@@ -10,9 +10,11 @@ sign-aware behavior so that class of local-green/driver-red can't recur.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scripts.verify_entry import norm_value  # noqa: E402
 
@@ -124,7 +126,6 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
     (the trace source) and pin that the compact JSON line is the LAST
     line of stdout and that stderr carries no stack frames."""
     import json
-    import os
     import subprocess
 
     env = dict(os.environ)
@@ -135,9 +136,9 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
             "join_multiway_sql,stream_window_counts,stream_cdc_scd2",
     })
     proc = subprocess.run(
-        [os.sys.executable, "/root/repo/bench.py"],
+        [os.sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True, text=True, timeout=900, env=env,
-        cwd="/root/repo")
+        cwd=REPO)
     assert proc.returncode == 0, proc.stderr[-2000:]
     out_lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert out_lines, "bench printed nothing"
@@ -378,12 +379,10 @@ def test_fuzzy_entity_oracle_converged_at_audit_scale():
     .scratch/sf1 fixture whenever it exists (it is regenerated every
     round), in ONE query so the shared CTE chain executes once: count
     of nodes whose round-9 and round-10 labels differ must be 0."""
-    import os
-
     import duckdb
     import pytest
 
-    sf1 = "/root/repo/.scratch/sf1/customer.parquet"
+    sf1 = os.path.join(REPO, ".scratch", "sf1", "customer.parquet")
     if not os.path.exists(sf1):
         pytest.skip("no .scratch/sf1 fixture on this box")
     import aws_etl_bank_spark.plans.registry as reg

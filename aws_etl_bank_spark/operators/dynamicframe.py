@@ -281,18 +281,7 @@ class DynamicFrame:
     def mapPartitions(self, f: Callable, transformation_ctx: str = "", info: str = "", schema=None) -> "DynamicFrame":
         """Partition-wise variant; callable receives an iterator of
         DynamicRecords (reference dynamicframe.py:117-119)."""
-        import pandas as pd
-
-        out_schema = schema or self._df.schema
-        names = [fld.name for fld in out_schema.fields]
-
-        def run(batches):
-            for pdf in batches:
-                recs = (DynamicRecord(r) for r in pdf.to_dict("records"))
-                out = [dict(r) for r in f(recs)]
-                yield pd.DataFrame(out, columns=names)
-
-        return self._with_df(self._df.mapInPandas(run, schema=out_schema))
+        return self.mapPartitionsWithIndex(lambda _i, recs: f(recs), transformation_ctx, schema)
 
     def mapPartitionsWithIndex(self, f: Callable, transformation_ctx: str = "", schema=None) -> "DynamicFrame":
         import pandas as pd
@@ -359,7 +348,8 @@ class DynamicFrame:
             .select(F.col("_record").alias("record"), F.col("_error").alias("error"), F.lit(stage).alias("stage"))
         )
         total, stage_errs = self._merge_errors(errs)
-        out = DynamicFrame(main, self.glue_ctx, self.name, errors_df=total, stage_errors_df=stage_errs)
+        out = DynamicFrame(main, self.glue_ctx, self.name, errors_df=total, stage_errors_df=stage_errs,
+                           choices=self._choices)
         if stageThreshold or totalThreshold:
             out.assertErrorThreshold(stageThreshold, totalThreshold)
         return out

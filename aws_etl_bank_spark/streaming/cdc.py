@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from aws_etl_bank_spark.scd import scd2_merge
+from aws_etl_bank_spark.streaming.runner import run_batches
 
 SCD_COLS = ["is_active", "record_created_time", "record_updated_time"]
 
@@ -95,11 +96,9 @@ def cdc_apply_scd2(stream: DataFrame, state_dir: str, key: str,
     never the one being deleted.  Default None keeps every version (the
     inspectable-audit shape the registry entry uses on 3 batches).
 
-    ``observer(batch_id, n_rows, wall_s)`` is the same per-batch hook
-    as stream_dedup_against_index's — scripts/cdc_throughput.py drives
-    THIS function with it for the decade-scale latency audit; the
-    per-batch ``count()`` is only paid when an observer is attached,
-    and doubles as the emptiness probe.
+    ``observer(batch_id, n_rows, wall_s)`` is ``runner.run_batches``'
+    per-batch hook — scripts/cdc_throughput.py drives THIS function
+    with it for the decade-scale latency audit.
 
     Checkpointed RESUME (r17 review): a restart replays the same batch
     ids, but the in-memory ``versions`` list starts empty — the first
@@ -109,7 +108,6 @@ def cdc_apply_scd2(stream: DataFrame, state_dir: str, key: str,
     by the strict bound) instead of silently re-stamping a fresh dim
     over the prior run's history."""
     import shutil
-    import time as _time
 
     if keep_versions is not None and keep_versions < 1:
         raise ValueError(
@@ -136,13 +134,6 @@ def cdc_apply_scd2(stream: DataFrame, state_dir: str, key: str,
         return sorted(out, key=lambda p: int(os.path.basename(p)[1:]))
 
     def handle(batch_df: DataFrame, batch_id: int):
-        t0 = _time.time()
-        if observer is not None:
-            n_rows = batch_df.count()
-            if n_rows == 0:
-                return
-        elif batch_df.isEmpty():
-            return
         if not versions:
             versions.extend(_disk_versions(below_batch=batch_id))
         current = spark.read.parquet(versions[-1]) if versions else None
@@ -157,14 +148,8 @@ def cdc_apply_scd2(stream: DataFrame, state_dir: str, key: str,
             for old in versions[:-keep_versions]:
                 shutil.rmtree(old, ignore_errors=True)
             del versions[:-keep_versions]
-        if observer is not None:
-            observer(batch_id, n_rows, _time.time() - t0)
 
-    writer = stream.writeStream.foreachBatch(handle)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.trigger(availableNow=True).start()
-    query.awaitTermination()
+    run_batches(stream, handle, checkpoint, observer)
     if not versions:
         # a resume that found nothing new to replay still has a dim
         versions.extend(_disk_versions(below_batch=2**63))

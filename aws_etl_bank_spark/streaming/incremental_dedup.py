@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from aws_etl_bank_spark.durable import atomic_write
 from aws_etl_bank_spark.llm.dedup import band_rows_matches, minhash_band_index
+from aws_etl_bank_spark.streaming.runner import run_batches
 
 
 def _verified_dup_ids(local: DataFrame, batch_bands: DataFrame,
@@ -344,15 +345,12 @@ def stream_dedup_against_index(stream: DataFrame, state_dir: str,
     a journaling filesystem with ordered data writes or a transactional
     table format.
 
-    ``observer(batch_id, n_rows, wall_s)``, when given, is called after
-    each non-empty micro-batch commits its state dir (compaction time
-    included on compaction batches) — the hook
-    scripts/incdedup_throughput.py uses so the decade-scale latency
+    ``observer(batch_id, n_rows, wall_s)`` is ``runner.run_batches``'
+    per-batch hook, called after each non-empty micro-batch commits its
+    state dir (compaction time included on compaction batches) — the
+    hook scripts/incdedup_throughput.py uses so the decade-scale latency
     audit measures THIS function rather than a drift-prone replica of
-    it (r16 review).  The per-batch ``count()`` is only paid when an
-    observer is attached, and doubles as the emptiness probe."""
-    import time as _time
-
+    it (r16 review)."""
     _require_local_dir(state_dir)
     pre_existing = (_committed_state_dirs(state_dir)
                     or _latest_compact(state_dir) is not None)
@@ -392,13 +390,6 @@ def stream_dedup_against_index(stream: DataFrame, state_dir: str,
         StructField("band_hash", LongType(), True)])
 
     def handle(batch_df: DataFrame, batch_id: int):
-        t0 = _time.time()
-        if observer is not None:
-            n_rows = batch_df.count()
-            if n_rows == 0:
-                return
-        elif batch_df.isEmpty():
-            return
         batch = batch_df.select(id_col, text_col)
         w = Window.partitionBy(text_col).orderBy(id_col)
         local = (batch.withColumn("__rn", F.row_number().over(w))
@@ -464,14 +455,8 @@ def stream_dedup_against_index(stream: DataFrame, state_dir: str,
                 survivors.unpersist()
             except NameError:
                 pass
-        if observer is not None:
-            observer(batch_id, n_rows, _time.time() - t0)
 
-    writer = stream.writeStream.foreachBatch(handle)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.trigger(availableNow=True).start()
-    query.awaitTermination()
+    run_batches(stream, handle, checkpoint, observer)
     cur = _latest_compact(state_dir)
     paths = [os.path.join(p, "kept")
              for p in _committed_state_dirs(

@@ -6,6 +6,10 @@ interval) + checkpointLocation, persists each batch, skips empty batches,
 retries failed batches with 1/2/5s backoff up to batchMaxRetries (≤100,
 default 3), and emits per-batch numRecords/latency metrics.
 
+``run_batches`` is the availableNow ``foreachBatch`` driver the stateful
+folds (CDC→SCD2, incremental dedup) share: it skips empty batches and
+reports each non-empty one to an optional observer.
+
 ``run_to_memory`` is the one lifecycle for the engine's bounded
 streams: it runs a query to completion (availableNow) into a
 uniquely named memory sink, returns the sunk rows as a batch frame,
@@ -90,6 +94,35 @@ def for_each_batch(frame: DataFrame, batch_function, options: dict):
             query.awaitTermination(int(timeout))
             query.stop()
     return metrics
+
+
+def run_batches(stream: DataFrame, handle, checkpoint: str | None = None,
+                observer=None) -> None:
+    """Run a bounded ``stream`` to completion (availableNow), calling
+    ``handle(batch_df, batch_id)`` on each non-empty micro-batch.
+
+    ``observer(batch_id, n_rows, wall_s)``, when given, is called after
+    ``handle`` returns, with the batch's row count and its wall time
+    (count included).  The per-batch ``count()`` is only paid when an observer is
+    attached, and doubles as the emptiness probe; otherwise an empty
+    batch is found by ``isEmpty()``."""
+
+    def run(batch_df: DataFrame, batch_id: int):
+        t0 = time.time()
+        if observer is not None:
+            n_rows = batch_df.count()
+            if n_rows == 0:
+                return
+        elif batch_df.isEmpty():
+            return
+        handle(batch_df, batch_id)
+        if observer is not None:
+            observer(batch_id, n_rows, time.time() - t0)
+
+    writer = stream.writeStream.foreachBatch(run)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def run_to_memory(frame: DataFrame, mode: str,

@@ -130,6 +130,31 @@ def test_union_type_conflict_makes_choice_struct(spark):
     assert vals == {1: "10", 2: "ten"}
 
 
+def test_filter_keeps_choice_types(spark):
+    a = DynamicFrame.fromDF(spark.createDataFrame([(1, 10)], "id long, v long"))
+    b = DynamicFrame.fromDF(spark.createDataFrame([(2, "ten")], "id long, v string"))
+    kept = a.union(b).filter(lambda r: True)
+    assert isinstance(kept.schema().getField("v").dataType, gt.ChoiceType)
+    resolved = kept.resolveChoice([("v", "cast:string")]).toDF()
+    assert {r["id"]: r["v"] for r in resolved.collect()} == {1: "10", 2: "ten"}
+
+
+def test_map_partitions_with_and_without_index(people):
+    frame = DynamicFrame.fromDF(people.toDF().select("id", "name").repartition(2, "id"))
+
+    def tag(idx, recs):
+        for r in recs:
+            r["name"] = f"{idx}:{r['name']}"
+            yield r
+
+    tagged = {r["id"]: r["name"] for r in frame.mapPartitionsWithIndex(tag).toDF().collect()}
+    owner = {r["id"]: r["p"] for r in frame.toDF().select("id", F.spark_partition_id().alias("p")).collect()}
+    assert tagged == {i: f"{owner[i]}:{n}" for i, n in [(1, "alice"), (2, "bob"), (3, "carol")]}
+
+    upper = frame.mapPartitions(lambda recs: ({**r, "name": r["name"].upper()} for r in recs))
+    assert sorted(r["name"] for r in upper.toDF().collect()) == ["ALICE", "BOB", "CAROL"]
+
+
 def test_resolve_choice_actions(spark):
     a = DynamicFrame.fromDF(spark.createDataFrame([(1, 10)], "id long, v long"))
     b = DynamicFrame.fromDF(spark.createDataFrame([(2, "ten")], "id long, v string"))
